@@ -48,7 +48,7 @@ object Pipeline {
   private[graft] val SinkThreadPrefix = "graft-pipeline-sink-"
 
   private val sinks: Seq[(DataFrame, String) => Unit] = Seq(
-    Sinks.writeCleanedLogs(_, _),
+    Sinks.writeCleanedLogs,
     Sinks.writeHourlyAggregation,
     Sinks.writeErrorReport,
     Sinks.writeBotReports)

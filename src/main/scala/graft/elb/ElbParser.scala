@@ -37,19 +37,23 @@ object ElbParser {
     spark.read.text(paths: _*)
       .withColumn("log_source_file", input_file_name())
 
-  /** Tokenize a `value` line column into the 29 raw fields. Space-separated,
-    * double-quote quoted — the CSV reader reproduces the shlex quoting rules
-    * used by the reference. Rows with fewer than 29 tokens leave the tail
-    * columns null and are rejected downstream (F1).
+  /** CSV parser options of the one ELB line tokenizer, shared by `tokenize`
+    * and the `elb` DataSource V2 reader. Space-separated, double-quote
+    * quoted — the CSV reader reproduces the shlex quoting rules used by the
+    * reference. nullValue is an impossible token: the CSV reader's default
+    * ("") would null a legitimately empty quoted 29th field and reject a row
+    * the reference's shlex parser keeps — with the sentinel, a null
+    * classification_reason means exactly "fewer than 29 tokens" (F1).
+    */
+  val csvOptions: Map[String, String] = Map("sep" -> " ", "quote" -> "\"",
+    "escape" -> "\\", "mode" -> "PERMISSIVE", "nullValue" -> "\u0000")
+
+  /** Tokenize a `value` line column into the 29 raw fields with
+    * [[csvOptions]]. Rows with fewer than 29 tokens leave the tail columns
+    * null and are rejected downstream (F1).
     */
   def tokenize(raw: DataFrame, barrier: Boolean = false): DataFrame = {
-    // nullValue is an impossible token: the CSV reader's default ("") would
-    // null a legitimately empty quoted 29th field and reject a row the
-    // reference's shlex parser keeps — with the sentinel, a null
-    // classification_reason means exactly "fewer than 29 tokens" (F1)
-    val opts = Map("sep" -> " ", "quote" -> "\"", "escape" -> "\\",
-      "mode" -> "PERMISSIVE", "nullValue" -> "\u0000")
-    val parsed = raw.withColumn("_r", from_csv(col("value"), ElbSchema.raw, opts))
+    val parsed = raw.withColumn("_r", from_csv(col("value"), ElbSchema.raw, csvOptions))
     if (barrier)
       // pushdown barrier (batch only — monotonically_increasing_id is
       // disallowed in streaming): the marker is non-deterministic and the

@@ -1,7 +1,6 @@
 package graft.elb
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Ingest staging for the non-splittable `.gz` problem (SURVEY §7.4.10).
   *
@@ -10,26 +9,18 @@ import org.apache.spark.sql.functions._
   * a splittable staging table: raw lines as zstd parquet, carrying the
   * originating file. Every downstream stage then parallelizes by HDFS/S3
   * split instead of by source file, and the parse projection runs over
-  * balanced partitions. The default pass is narrow (no shuffle, one task
-  * per source file); the optional `targetPartitions` rebalance IS a
-  * shuffle of the raw lines, for few/skewed source files.
+  * balanced partitions. The pass is narrow (no shuffle, one task per
+  * source file).
   */
 object Ingest {
 
   /** Stage raw `.gz` log lines into splittable zstd parquet
-    * (`value`, `log_source_file`). With the default `targetPartitions = 0`
-    * the pass is narrow (one task per gz file); a positive value inserts a
-    * `repartition` — a full SHUFFLE of the raw lines — worth paying only
-    * when the source files are few or badly skewed.
+    * (`value`, `log_source_file`), one task per gz file.
     */
-  def recompress(spark: SparkSession, inputGlobs: Seq[String], outDir: String,
-      targetPartitions: Int = 0): Unit = {
-    val raw = ElbParser.readRaw(spark, inputGlobs)
-    val sized = if (targetPartitions > 0) raw.repartition(targetPartitions) else raw
-    sized.write.mode("overwrite")
+  def recompress(spark: SparkSession, inputGlobs: Seq[String], outDir: String): Unit =
+    ElbParser.readRaw(spark, inputGlobs).write.mode("overwrite")
       .option("compression", "zstd")
       .parquet(outDir)
-  }
 
   /** Parse from a staged landing zone instead of raw `.gz`. */
   def parseStaged(spark: SparkSession, stagedDir: String): DataFrame =

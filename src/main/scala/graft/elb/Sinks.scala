@@ -43,66 +43,35 @@ object Sinks {
     * corpus). Without it, a 100 TB run with thousands of reducers sprays
     * every dir with thousands of small files — the small-file problem at
     * the sink.
-    *
-    * `filesPerDir` > 1 is the hot-partition escape hatch: one
-    * country/day dominating the corpus otherwise serializes its whole
-    * write into a single task. A bounded salt (hash of ip+time, so the
-    * spread is deterministic and independent of the dir keys' skew) is
-    * added to the REPARTITION ONLY — the written rows and the directory
-    * layout are unchanged; each dir just holds at most `filesPerDir`
-    * parquet files, written by up to that many parallel tasks. AQE's
-    * partition coalescing composes correctly with the salt: salt groups
-    * of a genuinely hot dir exceed the advisory partition size and stay
-    * parallel, while small dirs' groups are merged back — so the knob
-    * can be left on without spraying small dirs.
     */
-  def writeCleanedLogs(df: DataFrame, outDir: String, filesPerDir: Int = 1): Unit = {
-    require(filesPerDir >= 1, s"filesPerDir must be >= 1, got $filesPerDir")
+  def writeCleanedLogs(df: DataFrame, outDir: String): Unit = {
     val staged = df.filter(col("countryCode").isNotNull)
       .withColumn("time", timeString(col("time")))
       .withColumn("year", col("request_year").cast("string"))
       .withColumn("month", format_string("%02d", col("request_month")))
       .withColumn("day", format_string("%02d", col("request_day")))
-    val dirKeys = Seq(col("year"), col("month"), col("day"), col("countryCode"))
-    val routed =
-      if (filesPerDir == 1) staged.repartition(dirKeys: _*)
-      else staged.repartition(
-        dirKeys :+ pmod(hash(col("client_ip"), col("time")), lit(filesPerDir)): _*)
-    routed.write.partitionBy("year", "month", "day", "countryCode")
+    staged.repartition(col("year"), col("month"), col("day"), col("countryCode"))
+      .write.partitionBy("year", "month", "day", "countryCode")
       .mode("overwrite").parquet(s"$outDir/cleaned_logs")
   }
 
-  /** A1 + K2: hourly traffic rollup by geo.
-    *
-    * `exact = true` reproduces the reference bit-for-bit (exact distinct
-    * count + exact median). At 100 TB both are the rollup's only
-    * full-shuffle-width measures; `exact = false` swaps in
-    * `approx_count_distinct` (HLL++, mergeable sketch) and
-    * `approx_percentile` — constant-size partial state, same shuffle
-    * shape as the sums.
+  /** A1 + K2: hourly traffic rollup by geo, bit-for-bit the reference's
+    * (exact distinct count + exact median).
     */
-  def hourlyAggregation(df: DataFrame, exact: Boolean = true): DataFrame = {
-    val uniqueIps =
-      if (exact) countDistinct(col("client_ip"))
-      else approx_count_distinct(col("client_ip"))
-    val medianProc =
-      if (exact) median(col("total_processing_time_ms"))
-      else approx_percentile(col("total_processing_time_ms"), lit(0.5), lit(10000))
-        .cast("double")
+  def hourlyAggregation(df: DataFrame): DataFrame =
     df.filter(col("countryName").isNotNull && col("city").isNotNull)
       .groupBy(col("request_year"), col("request_month"), col("request_day"),
         col("request_hour"), col("countryName"), col("city"))
       .agg(
         count(col("client_ip")).as("request_count"),
-        uniqueIps.as("unique_client_ips_count"),
+        countDistinct(col("client_ip")).as("unique_client_ips_count"),
         avg(col("total_processing_time_ms")).as("average_total_processing_time"),
-        medianProc.as("median_total_processing_time"),
+        median(col("total_processing_time_ms")).as("median_total_processing_time"),
         sum(col("sent_bytes")).as("sum_sent_bytes"),
         sum(col("received_bytes")).as("sum_received_bytes"),
         count_if(col("status_code_type") === "2xx_Success").as("count_2xx"),
         count_if(col("status_code_type") === "4xx_ClientError").as("count_4xx"),
         count_if(col("status_code_type") === "5xx_ServerError").as("count_5xx"))
-  }
 
   def writeHourlyAggregation(df: DataFrame, outDir: String): Unit =
     hourlyAggregation(df).coalesce(1).write.mode("overwrite")

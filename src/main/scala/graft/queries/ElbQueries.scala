@@ -109,8 +109,7 @@ object ElbQueries {
 
   // —————————————————————————————————————— staged landing-zone variant
   // (the 100 TB ingest shape: narrow one-pass recompression of the
-  //  non-splittable gz corpus into splittable zstd parquet — no
-  //  targetPartitions rebalance, which would be a shuffle — then the
+  //  non-splittable gz corpus into splittable zstd parquet, then the
   //  identical pipeline; same oracle as q18, proving the staged path
   //  bit-identical)
   private def zstdPath(rows: Int): String =

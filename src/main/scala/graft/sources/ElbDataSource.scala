@@ -4,23 +4,25 @@ import java.io.{BufferedReader, InputStreamReader, ObjectInputStream, ObjectOutp
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
-import scala.collection.mutable.ArrayBuffer
-
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNotNull, StringContains, StringStartsWith}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.elb.ElbSchema
+import graft.elb.{ElbParser, ElbSchema}
 
 /** DataSource V2 for ELB/ALB access logs: `spark.read.format("elb")
   * .load(glob)` scans `.gz` (or plain) log files and emits the 29
@@ -38,14 +40,9 @@ import graft.elb.ElbSchema
   *    (reference behavior: whole-file streaming; the splittable path
   *    at scale is the q55 zstd landing zone, `elb/Ingest.scala`).
   *
-  * The line tokenizer reproduces Spark's `from_csv` quoting semantics
-  * for `sep=" " quote='"' escape='\'` EXACTLY — including the dark
-  * corners, each pinned by probing the real parser: unquoted fields
-  * treat quotes/escapes literally; empty unquoted fields are null,
-  * quoted empties are `""`; an unclosed quote consumes the rest of the
-  * line with escapes applied; garbage after a closing quote reverts
-  * the field to RAW text (quotes kept) up to the next separator; a
-  * trailing separator at end-of-line emits nothing.
+  * Each line goes through the parser behind `from_csv` with the same
+  * options ([[graft.elb.ElbParser.csvOptions]]), so both paths share one
+  * tokenizer.
   */
 class ElbDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "elb"
@@ -63,15 +60,11 @@ object ElbDataSource {
     StructType(ElbSchema.raw.fields :+ StructField(fileColumn, StringType, nullable = false))
 
   /** Paths from DSv2 options: `.load(p)` → "path"; `.load(ps: _*)` →
-    * "paths" as a JSON string array (simple values — parsed with the
-    * JSON string-literal rules, no nesting exists here).
+    * "paths" as a JSON string array, decoded as Spark's file sources do.
     */
   private[sources] def resolvePaths(props: java.util.Map[String, String]): Seq[String] = {
     val multi = Option(props.get("paths")).toSeq.flatMap { js =>
-      val s = js.trim.stripPrefix("[").stripSuffix("]")
-      // JSON string literals, comma-separated; our paths contain no
-      // escapes beyond what URI-safe file paths allow
-      s.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+      new ObjectMapper().readValue(js, classOf[Array[String]]).toSeq
     }
     val single = Option(props.get("path")).toSeq
     val all = multi ++ single
@@ -135,27 +128,16 @@ class ElbScanBuilder(paths: Seq[String], conf: SerializableHadoopConf)
     with SupportsPushDownFilters {
   private var required: StructType = ElbDataSource.fullSchema
   private var pushed: Array[Filter] = Array.empty
+  // Spark prunes in table order, so the file column stays last
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
-  /** Accept the string-comparison shapes the reader can evaluate on the
-    * token array BEFORE materializing a row (null-safe: a null token
-    * fails every accepted predicate, exactly like the SQL semantics).
-    * Everything accepted is ALSO returned as a post-scan filter —
-    * standard V2 contract for sources that cannot guarantee exhaustive
-    * application (Spark re-checks; the win is rows dropped pre-alloc).
+  /** Accept every filter on raw columns: the parser drops the rows they
+    * reject as it reads. Each is ALSO returned as a post-scan filter,
+    * because the parser passes on, unfiltered, a line with missing fields.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rest) = filters.partition {
-      case EqualTo(a, _: String) => ElbSchema.rawColumns.contains(a)
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) =>
-        ElbSchema.rawColumns.contains(a)
-      case IsNotNull(a) => ElbSchema.rawColumns.contains(a)
-      case StringStartsWith(a, _) => ElbSchema.rawColumns.contains(a)
-      case StringContains(a, _) => ElbSchema.rawColumns.contains(a)
-      case _ => false
-    }
-    pushed = ok
-    rest ++ ok
+    pushed = filters.filter(_.references.forall(ElbSchema.rawColumns.contains))
+    filters
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan = new ElbScan(paths, required, pushed, conf)
@@ -174,7 +156,7 @@ class ElbScan(paths: Seq[String], required: StructType, pushed: Array[Filter],
   override def planInputPartitions(): Array[InputPartition] =
     files.map(ElbFilePartition(_): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new ElbReaderFactory(required.fieldNames, pushed, conf)
+    new ElbReaderFactory(required, pushed, conf)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new ElbMicroBatchStream(paths, required, pushed, conf)
 }
@@ -205,55 +187,40 @@ class ElbMicroBatchStream(paths: Seq[String], required: StructType,
     listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new ElbReaderFactory(required.fieldNames, pushed, conf)
+    new ElbReaderFactory(required, pushed, conf)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-class ElbReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
+class ElbReaderFactory(required: StructType, pushed: Array[Filter],
     conf: SerializableHadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ElbPartitionReader(partition.asInstanceOf[ElbFilePartition].path,
-      fieldNames, pushed, conf)
+      required, pushed, conf)
 }
 
-/** Streams one log file; emits only the required fields, dropping rows
-  * that fail a pushed filter before any row materializes.
+/** Streams one log file through `from_csv`'s parser: Univocity extracts
+  * only the required raw fields, and rows failing a pushed filter are
+  * dropped before they leave the reader.
   */
-class ElbPartitionReader(pathStr: String, fieldNames: Array[String],
+class ElbPartitionReader(pathStr: String, required: StructType,
     pushed: Array[Filter], conf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 
-  // required-field → raw-column index; -1 = the file-path column
-  private val fieldIdx: Array[Int] =
-    fieldNames.map(n => ElbSchema.rawColumns.indexOf(n))
-  private val pathUtf8 = UTF8String.fromString(pathStr)
+  private val rawRequired =
+    StructType(required.filter(_.name != ElbDataSource.fileColumn))
+  // the file column, when required, is last (ElbScanBuilder.pruneColumns)
+  private val fileRow: InternalRow =
+    if (rawRequired.length == required.length) null
+    else InternalRow(UTF8String.fromString(pathStr))
 
-  // pushed filters compiled to (raw index, predicate on the token)
-  private val preds: Array[(Int, String => Boolean)] = pushed.map {
-    case EqualTo(a, v: String) => ElbSchema.rawColumns.indexOf(a) ->
-      ((t: String) => t == v)
-    case In(a, vs) =>
-      val set = vs.map(_.asInstanceOf[String]).toSet
-      ElbSchema.rawColumns.indexOf(a) -> ((t: String) => set.contains(t))
-    case IsNotNull(a) => ElbSchema.rawColumns.indexOf(a) ->
-      ((_: String) => true) // non-null check is the null guard below
-    case StringStartsWith(a, p) => ElbSchema.rawColumns.indexOf(a) ->
-      ((t: String) => t.startsWith(p))
-    case StringContains(a, s) => ElbSchema.rawColumns.indexOf(a) ->
-      ((t: String) => t.contains(s))
-    case f => throw new IllegalStateException(s"unpushable filter $f")
-  }
-
-  private def passes(toks: Array[String]): Boolean = {
-    var i = 0
-    while (i < preds.length) {
-      val (idx, p) = preds(i)
-      val t = toks(idx)
-      if (t == null || !p(t)) return false
-      i += 1
-    }
-    true
+  // what `from_csv` builds, including its one-line-per-input separator
+  private val parser = {
+    val options = new CSVOptions(ElbParser.csvOptions + ("lineSep" -> "\uFFFF"),
+      columnPruning = true, SQLConf.get.sessionLocalTimeZone)
+    val univocity = new UnivocityParser(ElbSchema.raw, rawRequired, options, pushed.toSeq)
+    new FailureSafeParser[String](line => univocity.parse(line), options.parseMode,
+      rawRequired, options.columnNameOfCorruptRecord)
   }
 
   private lazy val reader: BufferedReader = {
@@ -264,80 +231,17 @@ class ElbPartitionReader(pathStr: String, fieldNames: Array[String],
     new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
   }
 
+  private val rows: Iterator[InternalRow] =
+    Iterator.continually(reader.readLine()).takeWhile(_ != null).flatMap(parser.parse)
+
   private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    var line = reader.readLine()
-    while (line != null) {
-      val toks = ElbLineTokenizer.splitLine(line, ElbSchema.rawColumns.length)
-      if (passes(toks)) {
-        val vals = new Array[Any](fieldIdx.length)
-        var i = 0
-        while (i < fieldIdx.length) {
-          val idx = fieldIdx(i)
-          vals(i) =
-            if (idx < 0) pathUtf8
-            else if (toks(idx) == null) null
-            else UTF8String.fromString(toks(idx))
-          i += 1
-        }
-        current = new GenericInternalRow(vals)
-        return true
-      }
-      line = reader.readLine()
-    }
-    false
+  override def next(): Boolean = rows.hasNext && {
+    // the parser reuses its output row
+    val row = rows.next().copy()
+    current = if (fileRow == null) row else new JoinedRow(row, fileRow)
+    true
   }
   override def get(): InternalRow = current
   override def close(): Unit = reader.close()
-}
-
-/** `from_csv(sep=" ", quote='"', escape='\')` quoting semantics as a
-  * single JVM pass (see [[ElbDataSource]] scaladoc for the pinned
-  * rule set). Returns a fixed-width array; absent tail fields null.
-  */
-object ElbLineTokenizer {
-  def splitLine(line: String, width: Int): Array[String] = {
-    val out = new ArrayBuffer[String](width)
-    val n = line.length
-    var i = 0
-    while (i < n && out.length < width) {
-      if (line.charAt(i) == '"') {
-        val qstart = i
-        i += 1
-        val sb = new java.lang.StringBuilder
-        var closed = false
-        while (i < n && !closed) {
-          val c = line.charAt(i)
-          if (c == '\\' && i + 1 < n &&
-              (line.charAt(i + 1) == '"' || line.charAt(i + 1) == '\\')) {
-            sb.append(line.charAt(i + 1)); i += 2
-          } else if (c == '"') { closed = true; i += 1 }
-          else { sb.append(c); i += 1 }
-        }
-        if (!closed) {
-          // unclosed quote: rest of line, escapes already applied
-          out += sb.toString; i = n
-        } else if (i >= n) { out += sb.toString }
-        else if (line.charAt(i) == ' ') { out += sb.toString; i += 1 }
-        else {
-          // garbage after the closing quote: revert to RAW text (quotes
-          // kept) from the original field start to the next separator
-          val j = line.indexOf(' ', i)
-          if (j < 0) { out += line.substring(qstart); i = n }
-          else { out += line.substring(qstart, j); i = j + 1 }
-        }
-      } else {
-        val j = line.indexOf(' ', i)
-        val end = if (j < 0) n else j
-        val f = line.substring(i, end)
-        out += (if (f.isEmpty) null else f)
-        i = end + 1
-      }
-    }
-    val res = new Array[String](width)
-    var k = 0
-    while (k < out.length && k < width) { res(k) = out(k); k += 1 }
-    res
-  }
 }

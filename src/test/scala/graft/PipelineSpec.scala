@@ -55,44 +55,6 @@ class PipelineSpec extends SparkSpec {
     assert(summary.columns.toSeq == Seq("countryName", "isp", "bot_request_count"))
   }
 
-  test("hot-dir salt bounds files per dir and leaves rows + layout unchanged") {
-    import graft.elb.{ElbParser, Features, Sinks, SyntheticElb}
-    import graft.geo.{GeoCache, OfflineGeoResolver}
-    val glob = SyntheticElb.dataset(2000)
-    val cache = Files.createTempDirectory("salt-geo").resolve("cache.parquet").toString
-    val fin = Features(GeoCache.enrich(spark,
-      ElbParser.parse(spark, Seq(glob)), cache, new OfflineGeoResolver()))
-    val base = Files.createTempDirectory("salt-base").toString
-    val salted = Files.createTempDirectory("salt-k3").toString
-    Sinks.writeCleanedLogs(fin, base)
-    // AQE correctly re-merges SMALL salt groups (at scale only hot dirs
-    // stay spread); disable coalescing here so the spread is observable
-    // on this tiny corpus
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    spark.conf.set(key, "false")
-    try Sinks.writeCleanedLogs(fin, salted, filesPerDir = 3)
-    finally spark.conf.unset(key)
-    def leafDirs(f: java.io.File): Seq[java.io.File] =
-      if (f.getName.startsWith("countryCode=")) Seq(f)
-      else f.listFiles().filter(_.isDirectory).toSeq.flatMap(leafDirs)
-    val counts = leafDirs(new java.io.File(s"$salted/cleaned_logs"))
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(counts.nonEmpty)
-    counts.foreach { case (d, n) =>
-      assert(n >= 1 && n <= 3, s"dir $d has $n files (cap 3)") }
-    assert(counts.map(_._2).sum > counts.size,
-      "the salt should spread at least one dir across multiple files")
-    // identical rows and identical dir layout — only the file count changed
-    val b = spark.read.parquet(s"$base/cleaned_logs")
-    val s = spark.read.parquet(s"$salted/cleaned_logs")
-    assert(s.count() == b.count() && s.count() > 0)
-    assert(s.exceptAll(b).count() == 0 && b.exceptAll(s).count() == 0)
-    val dirNames = (root: String) => leafDirs(new java.io.File(s"$root/cleaned_logs"))
-      .map(_.getPath.stripPrefix(root)).toSet
-    assert(dirNames(salted).map(_.replaceFirst("/[^/]*cleaned_logs", "")) ==
-      dirNames(base).map(_.replaceFirst("/[^/]*cleaned_logs", "")))
-  }
-
   test("second run reuses the geo cache (no resolver calls) and overwrites cleanly") {
     import graft.elb.{ElbParser, Sinks}
     import graft.geo.{GeoCache, GeoRecord, GeoResolver, OfflineGeoResolver}

@@ -10,17 +10,23 @@ import graft.elb.ElbSchema
   * distinct IPs → misses = IPs ∉ cache → serial fetch → keep-last upsert →
   * rewrite cache → left-join logs → rename `country`→`countryName`.
   *
-  * Spark-first mapping: the miss set is a `left_anti` join; the keep-last
-  * upsert is a `row_number` window over an explicit source-priority column
-  * (`dropDuplicates` keeps an arbitrary row — not equivalent); the final
-  * enrichment is a *broadcast* left join (the cache is bounded by distinct
-  * IP cardinality, orders of magnitude smaller than the 100 TB log side, so
+  * Spark-first mapping: the miss set is a `left_anti` join; the cache is an
+  * append-only directory of parquet files — each run adds its fresh rows
+  * as new files and never rewrites or deletes one, so a concurrent run
+  * never loses a file it has listed — and the keep-last rule is applied on
+  * read (newest `api_fetch_timestamp` per `query`). The final enrichment
+  * is a *broadcast* left join (the cache is bounded by distinct IP
+  * cardinality, orders of magnitude smaller than the 100 TB log side, so
   * it never deserves a shuffle of the big table).
   */
 object GeoCache {
 
   /** Schema-defensive cache load: missing path / empty dir → empty frame
     * with the canonical 12-column schema (reference: advanced_elb_logs_etl.py:201-229).
+    * Keeps one row per `query`: the newest `api_fetch_timestamp`, ties
+    * broken by the remaining columns so the survivor is deterministic.
+    * Sequential runs never add a duplicate (misses are anti-joined against
+    * the cache); only runs that resolved the same IP concurrently do.
     */
   def load(spark: SparkSession, path: String): DataFrame = {
     // Hadoop FS API, not java.io.File — the cache may live on S3/HDFS,
@@ -30,8 +36,15 @@ object GeoCache {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasData = fs.exists(p) && (fs.getFileStatus(p).isFile ||
       fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-    if (hasData) spark.read.schema(ElbSchema.geo).parquet(path)
-    else spark.createDataFrame(
+    if (hasData) {
+      val fields = ElbSchema.geo.fieldNames.toSeq
+      // struct ordering compares field by field: timestamp first, then the rest
+      val ranked = ("api_fetch_timestamp" +: fields.filterNot(
+        Set("query", "api_fetch_timestamp"))).map(col)
+      spark.read.schema(ElbSchema.geo).parquet(path)
+        .groupBy("query").agg(max(struct(ranked: _*)).as("r"))
+        .select(fields.map(f => if (f == "query") col(f) else col(s"r.$f").as(f)): _*)
+    } else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ElbSchema.geo)
   }
 
@@ -40,60 +53,28 @@ object GeoCache {
     logs.select(col("client_ip")).where(col("client_ip").isNotNull).distinct()
       .join(cache.select(col("query")), col("client_ip") === col("query"), "left_anti")
 
-  /** Keep-last upsert: rows in `fresh` replace same-key rows in `cache`
-    * (reference: advanced_elb_logs_etl.py:244-246 — concat + drop-dup keep
-    * 'last', i.e. new wins).
+  /** Add `fresh` to the cache at `path` as new files. The rows are written
+    * to `<path>/_stage-<uuid>` — a `_`-prefixed directory, which Spark's
+    * file listing and a DuckDB `*.parquet` glob over the cache both skip —
+    * and each data file is then renamed into `<path>` (Spark's part-file
+    * names are unique per write). A crash leaves at most a stage
+    * directory behind, which readers ignore.
     */
-  def upsert(cache: DataFrame, fresh: DataFrame): DataFrame =
-    graft.ops.Relational.keepLastUpsert(cache, fresh, Seq("query"))
-
-  /** Atomically replace the cache parquet at `path` with `updated`.
-    * Writes to a sibling temp dir first — Spark cannot overwrite a path it
-    * is lazily reading from. The temp/old names carry a unique token so
-    * concurrent runs can't collide on the STAGING paths, and the live
-    * cache is moved aside (not deleted) before promotion, so a crash
-    * mid-rewrite can lose at most the fresh rows — never the whole cache.
-    * The promote re-checks the destination and aborts if a concurrent
-    * rewrite has promoted in between; a small window remains between the
-    * check and the rename — truly concurrent writers need an external
-    * lock (e.g. an atomic lock-file create next to the cache).
-    */
-  def rewrite(updated: DataFrame, path: String): Unit = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp-$token")
-    updated.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val dst = new org.apache.hadoop.fs.Path(path)
+  def append(fresh: DataFrame, path: String): Unit = {
+    val stage = new org.apache.hadoop.fs.Path(
+      path, s"_stage-${java.util.UUID.randomUUID()}")
+    fresh.coalesce(1).write.parquet(stage.toString)
     // resolve the filesystem FROM the path (like load) — FileSystem.get
     // would return the default FS and throw 'Wrong FS' for an s3a:// cache
-    val fs = dst.getFileSystem(
-      updated.sparkSession.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$path.old-$token")
-    val hadLive = fs.exists(dst)
-    val displaced = hadLive && fs.rename(dst, old)
-    // If the live cache exists but cannot be moved aside, ABORT: Hadoop's
-    // rename(tmp, dst) onto an existing directory nests tmp INSIDE dst
-    // and returns true — the promote would "succeed" while corrupting
-    // the cache layout and silently dropping the fresh rows.
-    if (hadLive && !displaced) throw new java.io.IOException(
-      s"geo cache rewrite aborted: cannot move live cache $path aside; " +
-      s"fresh data left at $tmp, live cache untouched")
-    // Re-check immediately before the promote: a concurrent rewrite can
-    // promote its own tmp here after our displace step, and Hadoop's
-    // rename(tmp, dst) onto an existing directory nests tmp INSIDE dst
-    // and returns true — a "successful" promote that corrupts the layout.
-    if (fs.exists(dst)) throw new java.io.IOException(
-      s"geo cache rewrite aborted: $path reappeared before promote " +
-      s"(concurrent rewrite?); fresh data left at $tmp" +
-      (if (displaced) s", displaced cache left at $old" else ""))
-    // Hadoop signals many rename failures by returning false, not
-    // throwing — swallowing it here would silently lose the cache
-    if (!fs.rename(tmp, dst)) {
-      if (displaced) fs.rename(old, dst) // put the live cache back
-      throw new java.io.IOException(
-        s"geo cache rewrite failed: rename $tmp -> $path returned false " +
-        "(previous cache restored; fresh data stranded at the .tmp path)")
+    val fs = stage.getFileSystem(
+      fresh.sparkSession.sparkContext.hadoopConfiguration)
+    for (f <- fs.listStatus(stage) if f.getPath.getName.endsWith(".parquet")) {
+      // Hadoop signals many rename failures by returning false, not throwing
+      if (!fs.rename(f.getPath, new org.apache.hadoop.fs.Path(path, f.getPath.getName)))
+        throw new java.io.IOException(
+          s"geo cache append failed: rename ${f.getPath} -> $path returned false")
     }
-    if (displaced) fs.delete(old, true)
+    fs.delete(stage, true)
   }
 
   /** One run's capped miss selection: the lexicographically-FIRST `max`
@@ -116,9 +97,11 @@ object GeoCache {
     (ips, deferred)
   }
 
-  /** Full enrichment stage: resolve cache misses via `resolver`, upsert +
-    * persist the cache, then broadcast-left-join onto `logs` and apply the
-    * reference's column standardization (`country` → `countryName`).
+  /** Full enrichment stage: resolve cache misses via `resolver`, append
+    * them to the cache, re-load it, then broadcast-left-join onto `logs`
+    * and apply the reference's column standardization (`country` →
+    * `countryName`). The re-load (not an in-memory union) also picks up
+    * rows a concurrent run appended meanwhile, deduplicated by [[load]].
     *
     * `maxMissesPerRun` bounds the driver-side collect: at 100 TB the
     * distinct-miss set alone can be tens of millions of rows — an
@@ -141,8 +124,7 @@ object GeoCache {
     val updated = if (missIps.nonEmpty) {
       val fresh = resolver.resolve(missIps).toDF()
         .select(ElbSchema.geo.fieldNames.map(col).toSeq: _*)
-      val u = upsert(cache, fresh)
-      rewrite(u, cachePath)
+      append(fresh, cachePath)
       load(spark, cachePath)
     } else cache
     logs.join(broadcast(updated), logs("client_ip") === updated("query"), "left")

@@ -481,17 +481,12 @@ object Graph {
       .select(least(col("src"), col("tgt")).as("a"),
         greatest(col("src"), col("tgt")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-    // Round-16: the static edge set is staged ONCE hash-partitioned (and
-    // sorted) by `nb` — the [[bfsDistances]] layout trick — and the round
-    // body is reordered to count FIRST, filter the i-side SECOND:
-    // deg(i | alive) = |{nb ∈ alive}| is the same count whether or not
-    // dead i rows are dropped before grouping, so the per-round work is
-    // one co-partitioned semi-filter on the STAGED side (zero edge
-    // exchange), ONE data-sized groupBy exchange, and an alive-sized
-    // join — where the old i-then-nb join order re-exchanged the edge
-    // set twice per round.
-    val nParts = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
+    // The static symmetric edge set is staged ONCE (a plain eager
+    // `localCheckpoint`: no partitioning or sort), and the round body
+    // counts FIRST, filters the i-side SECOND: deg(i | alive) =
+    // |{nb ∈ alive}| is the same count whether or not dead i rows are
+    // dropped before grouping, so the per-round work is one semi-filter
+    // of the staged side against `alive` and ONE data-sized groupBy.
     val sym = und.select(col("a").as("i"), col("b").as("nb"))
       .union(und.select(col("b"), col("a")))
       .localCheckpoint(true)

@@ -16,9 +16,11 @@ object JobAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val only = args(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+    // thread count and shuffle partitions as Bench/Verify take them
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -23,16 +23,21 @@ class GeoCacheSpec extends SparkSpec {
     assert(a.forall(_.query.nonEmpty))
   }
 
-  test("upsert keeps the fresh row on key collision") {
+  test("load keeps the newest row per query across files") {
     import spark.implicits._
-    val t = Timestamp.valueOf("2025-01-01 00:00:00")
-    val old = Seq(GeoRecord("success", None, Some("OldLand"), Some("OL"), None,
-      None, None, None, None, None, "9.9.9.9", t)).toDF()
-    val fresh = Seq(GeoRecord("success", None, Some("NewLand"), Some("NL"), None,
-      None, None, None, None, None, "9.9.9.9", t)).toDF()
-    val merged = GeoCache.upsert(old, fresh).collect()
-    assert(merged.length == 1)
-    assert(merged.head.getAs[String]("country") == "NewLand")
+    val path = Files.createTempDirectory("geo").resolve("cache.parquet").toString
+    def rec(country: String, ts: String) = Seq(GeoRecord("success", None, Some(country),
+      None, None, None, None, None, None, None, "9.9.9.9", Timestamp.valueOf(ts))).toDF()
+    // the newer row is written first: the timestamp decides, not file order
+    GeoCache.append(rec("NewLand", "2025-01-02 00:00:00"), path)
+    GeoCache.append(rec("OldLand", "2025-01-01 00:00:00"), path)
+    assert(Files.list(java.nio.file.Paths.get(path)).toArray
+      .count(_.toString.endsWith(".parquet")) == 2)
+    val loaded = GeoCache.load(spark, path)
+    assert(loaded.schema == ElbSchema.geo)
+    val rows = loaded.collect()
+    assert(rows.length == 1)
+    assert(rows.head.getAs[String]("country") == "NewLand")
   }
 
   test("miss resolution is bounded per run and converges across runs") {
@@ -74,6 +79,58 @@ class GeoCacheSpec extends SparkSpec {
     // backlog == cap exactly: complete run, nothing deferred
     val (all, none) = GeoCache.selectMisses(spark, logs, empty, 10)
     assert(all.size == 10 && none == 0L)
+  }
+
+  test("concurrent enrich runs on one cache keep every row and lose no file") {
+    import spark.implicits._
+    val cachePath = Files.createTempDirectory("geo").resolve("cache.parquet").toString
+    val inputs = Seq(30 to 90, 1 to 60).map(_.map(i => s"10.0.1.$i").toDF("client_ip"))
+    // both runs select their misses before either writes, so 30..60 is
+    // resolved (and written) by both
+    val bothResolving = new java.util.concurrent.CyclicBarrier(2)
+    val resolver = new GeoResolver {
+      private val inner = new OfflineGeoResolver()
+      def resolve(ips: Seq[String]) = {
+        bothResolving.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        inner.resolve(ips)
+      }
+    }
+    val results = new java.util.concurrent.ConcurrentHashMap[Int, Either[Throwable, Long]]()
+    val threads = inputs.zipWithIndex.map { case (logs, i) =>
+      new Thread(() => results.put(i,
+        try Right(GeoCache.enrich(spark, logs, cachePath, resolver).count())
+        catch { case t: Throwable => Left(t) }))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(120000))
+    for ((logs, i) <- inputs.zipWithIndex)
+      assert(results.get(i) == Right(logs.count()), s"run $i: ${results.get(i)}")
+    val cache = GeoCache.load(spark, cachePath)
+    assert(cache.count() == 90)
+    assert(cache.select("query").distinct().count() == 90)
+  }
+
+  test("a leftover stage directory from a crashed append is ignored") {
+    import spark.implicits._
+    val cachePath = Files.createTempDirectory("geo").resolve("cache.parquet").toString
+    val ghost = Seq(GeoRecord("success", None, Some("Ghost"), None, None, None, None,
+      None, None, None, "10.0.2.1", Timestamp.valueOf("2030-01-01 00:00:00"))).toDF()
+    ghost.write.parquet(s"$cachePath/_stage-crashed")
+    assert(GeoCache.load(spark, cachePath).count() == 0)
+    val logs = (1 to 3).map(i => s"10.0.2.$i").toDF("client_ip")
+    val calls = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val counting = new GeoResolver {
+      private val inner = new OfflineGeoResolver()
+      def resolve(ips: Seq[String]) = { calls += ips; inner.resolve(ips) }
+    }
+    val enriched = GeoCache.enrich(spark, logs, cachePath, counting)
+    assert(calls.toSeq == Seq(Seq("10.0.2.1", "10.0.2.2", "10.0.2.3")))
+    assert(enriched.count() == 3)
+    assert(enriched.filter(col("countryName") === "Ghost").count() == 0)
+    // the cache now has data files beside the stage dir; the listing skips it
+    val cache = GeoCache.load(spark, cachePath)
+    assert(cache.count() == 3)
+    assert(cache.filter(col("country") === "Ghost").count() == 0)
   }
 
   test("end-to-end enrich: misses resolved, cache persisted, join + rename applied") {

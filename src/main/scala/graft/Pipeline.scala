@@ -24,7 +24,8 @@ import graft.geo.{GeoCache, GeoResolver, OfflineGeoResolver}
   * write, which run one after another leaves the other cores idle. The
   * `limit(5)` sample job likewise runs beside the geo stage rather than
   * ahead of it. The geo side effect is untouched: `GeoCache.enrich` still
-  * resolves and rewrites the cache eagerly, once, on the calling thread.
+  * resolves the misses and appends them to the cache eagerly, once, on the
+  * calling thread.
   *
   * Failure contract: every sink runs to completion even when another fails;
   * the first failure (in sink order) is rethrown with the rest attached as

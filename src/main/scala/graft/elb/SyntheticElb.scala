@@ -1,7 +1,7 @@
 package graft.elb
 
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
 /** Deterministic synthetic ALB access-log generator (main scope — used by
@@ -48,8 +48,8 @@ object SyntheticElb {
       "\"" + status + "\" \"-\" \"-\""
   }
 
-  /** Write `n` lines across `files` gzip files under `dir`; returns the glob. */
-  def writeDataset(dir: Path, n: Int, files: Int = 16): String = {
+  /** Write `n` lines across `files` gzip files under `dir`. */
+  def writeDataset(dir: Path, n: Int, files: Int = 16): Unit = {
     Files.createDirectories(dir)
     val perFile = math.max(1, n / files)
     (0 until files).foreach { f =>
@@ -61,24 +61,29 @@ object SyntheticElb {
         .foreach { i => w.write(line(i)); w.write("\n") }
       finally w.close()
     }
-    dir.resolve("*.log.gz").toString
   }
 
-  /** Cached per-JVM dataset keyed by row count (queries re-run cheaply).
-    * 16 files: gzip is non-splittable, so file count IS the parse
+  /** 16 files: gzip is non-splittable, so file count IS the parse
     * parallelism. The dir name encodes the generator parameters, so
     * changing them can never pick up a stale corpus from a previous
-    * layout (the glob matches all part files in the dir).
+    * layout.
     */
   private val files = 16
-  private val cache = scala.collection.concurrent.TrieMap.empty[Int, String]
 
   /** Deterministic corpus directory for `n` lines — shared with the DuckDB
     * oracle, which reads staging tables written under `<dir>/_staged/`.
     */
-  def dirFor(n: Int): Path =
-    Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-elb-$n-f$files")
+  def dirFor(n: Int): Path = graft.Staging.path(s"graft-synth-elb-$n-f$files")
 
-  def dataset(n: Int): String =
-    cache.getOrElseUpdate(n, writeDataset(dirFor(n), n, files))
+  /** The corpus directory for `n` lines, written once per JVM
+    * ([[graft.Staging.once]]). Readers take the directory itself: the
+    * text source, the text stream and the `elb` source all list its
+    * non-`_` files, so `_staged/` is never read as corpus, and a plain
+    * directory (unlike a glob) passes Spark's metadata-dir probe quietly.
+    */
+  def dataset(n: Int): String = {
+    val dir = dirFor(n)
+    graft.Staging.once(dir.toString)(writeDataset(dir, n, files))
+    dir.toString
+  }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import javax.imageio.{IIOImage, ImageIO}
 import javax.imageio.stream.MemoryCacheImageOutputStream
@@ -1029,12 +1029,11 @@ object Multimodal {
       MediaRow(id, "image",
         if (id % 17 == 5) junk else gradientPngBytes(id))
     def gradientDirFor: Path =
-      Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-gradient-$gradientRows-v1")
+      graft.Staging.path(s"graft-synth-gradient-$gradientRows-v1")
     def gradientParquetPath: String =
       gradientDirFor.resolve("media.parquet").toString
-    private val gradientStaged = new java.util.concurrent.atomic.AtomicBoolean(false)
     def gradientDataset(spark: SparkSession): String = {
-      if (gradientStaged.compareAndSet(false, true)) {
+      graft.Staging.once(gradientParquetPath) {
         import spark.implicits._
         spark.range(gradientRows).repartition(4)
           .mapPartitions { it =>
@@ -1084,12 +1083,11 @@ object Multimodal {
     def checkerMediaFor(id: Long): MediaRow =
       MediaRow(id, "image", if (id % 13 == 3) junk else checkerPngBytes(id))
     def checkerDirFor: Path =
-      Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-checker-$checkerRows-v1")
+      graft.Staging.path(s"graft-synth-checker-$checkerRows-v1")
     def checkerParquetPath: String =
       checkerDirFor.resolve("media.parquet").toString
-    private val checkerStaged = new java.util.concurrent.atomic.AtomicBoolean(false)
     def checkerDataset(spark: SparkSession): String = {
-      if (checkerStaged.compareAndSet(false, true)) {
+      graft.Staging.once(checkerParquetPath) {
         import spark.implicits._
         spark.range(checkerRows).repartition(4)
           .mapPartitions { it =>
@@ -1139,13 +1137,11 @@ object Multimodal {
     def letterboxMediaFor(id: Long): MediaRow =
       MediaRow(id, "image", if (id % 13 == 3) junk else letterboxPngBytes(id))
     def letterboxDirFor: Path =
-      Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-synth-letterbox-$letterboxRows-v1")
+      graft.Staging.path(s"graft-synth-letterbox-$letterboxRows-v1")
     def letterboxParquetPath: String =
       letterboxDirFor.resolve("media.parquet").toString
-    private val letterboxStaged = new java.util.concurrent.atomic.AtomicBoolean(false)
     def letterboxDataset(spark: SparkSession): String = {
-      if (letterboxStaged.compareAndSet(false, true)) {
+      graft.Staging.once(letterboxParquetPath) {
         import spark.implicits._
         spark.range(letterboxRows).repartition(4)
           .mapPartitions { it =>
@@ -1181,17 +1177,15 @@ object Multimodal {
       * encodes the generator version — bump `v1` if any formula changes so
       * a stale corpus from an older layout can never be picked up.
       */
-    def dirFor: Path =
-      Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-media-$rows-v1")
+    def dirFor: Path = graft.Staging.path(s"graft-synth-media-$rows-v1")
     def parquetPath: String = dirFor.resolve("media.parquet").toString
 
-    private val staged = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-    /** Stage the corpus as parquet (binary `content` column) once per JVM;
-      * generation is distributed (`spark.range` → codec encode per row).
+    /** Stage the corpus as parquet (binary `content` column) once per JVM
+      * ([[graft.Staging.once]]); generation is distributed (`spark.range`
+      * → codec encode per row).
       */
     def dataset(spark: SparkSession): String = {
-      if (staged.compareAndSet(false, true)) {
+      graft.Staging.once(parquetPath) {
         import spark.implicits._
         spark.range(rows).repartition(8)
           .mapPartitions { it =>

@@ -56,19 +56,17 @@ object ElbQueries {
   private def geoCachePath(rows: Int): String =
     s"${stagedDir(rows)}/geo_cache.parquet"
 
-  private val stagedOnce = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
-
-  /** Stage the corpus's raw lines as parquet for the DuckDB oracle —
-    * generated distributed (`spark.range` → `line(i)`), NOT re-read from
-    * the `.gz` files, so gz scan + tokenize are both under oracle check.
+  /** Stage the corpus's raw lines as parquet for the DuckDB oracle, once
+    * per JVM — generated distributed (`spark.range` → `line(i)`), NOT
+    * re-read from the `.gz` files, so gz scan + tokenize are both under
+    * oracle check.
     */
   private def stageRawLines(s: SparkSession, rows: Int): Unit =
-    stagedOnce.getOrElseUpdate(rows, {
+    graft.Staging.once(rawLinesPath(rows)) {
       import s.implicits._
       s.range(rows).map(i => SyntheticElb.line(i.toInt)).toDF("value")
         .coalesce(4).write.mode("overwrite").parquet(rawLinesPath(rows))
-      true
-    })
+    }
 
   /** Shared featured frame for the ELB queries. Deliberately NOT
     * persisted: each query projects a narrow column subset, and letting
@@ -87,9 +85,9 @@ object ElbQueries {
 
   private def featured(s: SparkSession, dir: String): DataFrame = {
     val rows = rowsFor(dir)
-    val glob = SyntheticElb.dataset(rows)
+    val corpus = SyntheticElb.dataset(rows)
     stageRawLines(s, rows)
-    featuredFrom(s, rows, ElbParser.parse(s, Seq(glob)))
+    featuredFrom(s, rows, ElbParser.parse(s, Seq(corpus)))
   }
 
   /** Full reference pipeline minus sinks: parse → geo enrich (offline
@@ -114,16 +112,13 @@ object ElbQueries {
   //  bit-identical)
   private def zstdPath(rows: Int): String =
     s"${stagedDir(rows)}/landing_zstd.parquet"
-  private val zstdStaged = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
 
   val q55ElbStaged: Q = (s, dir) => {
     val rows = rowsFor(dir)
-    val glob = SyntheticElb.dataset(rows)
+    val corpus = SyntheticElb.dataset(rows)
     stageRawLines(s, rows)
-    zstdStaged.getOrElseUpdate(rows, {
-      graft.elb.Ingest.recompress(s, Seq(glob), zstdPath(rows))
-      true
-    })
+    graft.Staging.once(zstdPath(rows))(
+      graft.elb.Ingest.recompress(s, Seq(corpus), zstdPath(rows)))
     pipelineSelect(
       featuredFrom(s, rows, graft.elb.Ingest.parseStaged(s, zstdPath(rows))))
   }
@@ -137,10 +132,10 @@ object ElbQueries {
   //  protect; the reader IS the single evaluation.)
   val q97ElbV2: Q = (s, dir) => {
     val rows = rowsFor(dir)
-    val glob = SyntheticElb.dataset(rows)
+    val corpus = SyntheticElb.dataset(rows)
     stageRawLines(s, rows)
     pipelineSelect(featuredFrom(s, rows,
-      graft.elb.ElbParser.enrich(s.read.format("elb").load(glob))))
+      graft.elb.ElbParser.enrich(s.read.format("elb").load(corpus))))
   }
 
   // ——————————————————————— streaming ingest through the V2 source
@@ -152,9 +147,9 @@ object ElbQueries {
   //  check like its batch path does via q97.)
   val q98ElbStreamV2: Q = (s, dir) => {
     val rows = rowsFor(dir)
-    val glob = SyntheticElb.dataset(rows)
+    val corpus = SyntheticElb.dataset(rows)
     stageRawLines(s, rows)
-    val raw = s.readStream.format("elb").load(glob)
+    val raw = s.readStream.format("elb").load(corpus)
     val enriched = ElbParser.enrich(raw)
       .withColumn("status_code_type", Features.statusCodeType(
         ElbParser.nullSentinelLong(col("elb_status_code")).cast("int")))
@@ -327,9 +322,9 @@ object ElbQueries {
 
   val q45ElbStream: Q = (s, dir) => {
     val rows = rowsFor(dir)
-    val glob = SyntheticElb.dataset(rows)
+    val corpus = SyntheticElb.dataset(rows)
     stageRawLines(s, rows)
-    val raw = s.readStream.text(glob)
+    val raw = s.readStream.text(corpus)
       .withColumn("log_source_file", input_file_name())
     val enriched = ElbParser.enrich(ElbParser.tokenize(raw))
       .withColumn("status_code_type", Features.statusCodeType(

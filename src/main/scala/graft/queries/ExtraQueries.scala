@@ -147,15 +147,13 @@ object ExtraQueries {
   //  source, aggregated. The oracle computes the same aggregate from
   //  the parquet originals — matching hashes prove the ORC round-trip
   //  byte-lossless for every column the aggregate touches.)
-  private val orcStaged = scala.collection.concurrent.TrieMap.empty[String, String]
   val q201OrcRoundtrip: Q = (s, dir) => {
-    val staged = orcStaged.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-orc")
-        .resolve("documents.orc").toString
+    val staged = graft.Staging.once(s"orc|$dir") {
+      val p = graft.Staging.scratch("graft-orc").resolve("documents.orc").toString
       Tables.documents(s, dir).write.mode("overwrite")
         .option("compression", "zlib").orc(p)
       p
-    })
+    }
     s.read.orc(staged)
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -178,12 +176,10 @@ object ExtraQueries {
   //  the corrupt rows must land in exactly one quarantine row of 3 with
   //  every data column null. The oracle computes the good-row aggregate
   //  from parquet and pins the quarantine row as the contract.)
-  private val jsonStaged = scala.collection.concurrent.TrieMap.empty[String, String]
   val q217JsonRoundtrip: Q = (s, dir) => {
     import org.apache.spark.sql.types._
-    val staged = jsonStaged.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-jsonl")
-        .resolve("documents.jsonl").toString
+    val staged = graft.Staging.once(s"jsonl|$dir") {
+      val p = graft.Staging.scratch("graft-jsonl").resolve("documents.jsonl").toString
       Tables.documents(s, dir).write.mode("overwrite").json(p)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(p, "part-99999-planted-corrupt.json"),
@@ -191,7 +187,7 @@ object ExtraQueries {
           "not json at all\n" +
           "{\"doc_id\": \n").getBytes("UTF-8"))
       p
-    })
+    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -226,15 +222,13 @@ object ExtraQueries {
   //  per-file pruned record decode back. Hash-matching the parquet
   //  aggregate proves the container round-trip lossless for every
   //  column touched.)
-  private val avroStaged = scala.collection.concurrent.TrieMap.empty[String, String]
   val q219AvroRoundtrip: Q = (s, dir) => {
-    val staged = avroStaged.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-avro")
-        .resolve("documents.avro").toString
+    val staged = graft.Staging.once(s"avro|$dir") {
+      val p = graft.Staging.scratch("graft-avro").resolve("documents.avro").toString
       graft.sources.AvroStage.write(
         Tables.documents(s, dir).repartition(4), p, "document")
       p
-    })
+    }
     s.read.format("graftavro").load(staged)
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -454,7 +448,6 @@ object ExtraQueries {
   //  dropped) → probe. The oracle replays the IVF assignment, probe,
   //  and ranking over the SURVIVING corpus only — one resurrected or
   //  half-deleted id flips the hash.)
-  private val ivfDeleteIndex = scala.collection.concurrent.TrieMap.empty[String, String]
   val q230IvfDelete: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val centroids = emb.filter(col("vec_id") < 16)
@@ -463,15 +456,13 @@ object ExtraQueries {
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"),
         Similarity.asDouble(col("embedding")).as("qvec"))
-    val path = ivfDeleteIndex.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-ivf-del-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 16), centroids, p)
+    val path = graft.Staging.pathFor("graft-ivf-del", dir)
+    graft.Staging.once(path) {
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 16), centroids, path)
       Similarity.deleteFromIvfIndex(s,
         emb.filter(col("vec_id") >= 16 && pmod(col("vec_id"), lit(7)) === 0)
-          .select(col("vec_id")), p)
-      p
-    })
+          .select(col("vec_id")), path)
+    }
     Similarity.ivfTopKIndexedBatch(path, centroids, queries, k = 5, nProbe = 2)
   }
   private val q230Sql: String = """
@@ -881,11 +872,18 @@ object ExtraQueries {
     SELECT bucket, n_rows, (1000000 * n_rows) // n_total AS share_ppm
     FROM c CROSS JOIN t"""
 
+  /** The IVF index over vec_id ≥ 16 that q207 and q265 share. */
+  private def ivfRecallIndex(dir: String, corpus: DataFrame,
+      centroids: DataFrame): String = {
+    val path = graft.Staging.pathFor("graft-ivf-recall", dir)
+    graft.Staging.once(path)(Similarity.buildIvfIndex(corpus, centroids, path))
+    path
+  }
+
   // —————————————————————————————— ANN recall gate (q207)
   // (recall@5 of the nProbe=2 IVF probe against the exact scan over the
   //  SAME corpus — the index-deployment acceptance number. The oracle
   //  replays both retrievals and the intersection.)
-  private val ivfRecallIndex = scala.collection.concurrent.TrieMap.empty[String, String]
   val q207IvfRecall: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val centroids = emb.filter(col("vec_id") < 16)
@@ -895,12 +893,7 @@ object ExtraQueries {
       .select(col("vec_id").as("q_id"),
         Similarity.asDouble(col("embedding")).as("qvec"))
     val corpus = emb.filter(col("vec_id") >= 16)
-    val path = ivfRecallIndex.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-ivf-recall-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Similarity.buildIvfIndex(corpus, centroids, p)
-      p
-    })
+    val path = ivfRecallIndex(dir, corpus, centroids)
     val approx = Similarity
       .ivfTopKIndexedBatch(path, centroids, queries, k = 5, nProbe = 2)
     val exact = Similarity.bruteForceTopKBatch(corpus, queries, k = 5)
@@ -1835,15 +1828,13 @@ object ExtraQueries {
   //  the misplaced copies whose argmax ≠ 0, and the same ids as
   //  sidecar mismatches. The oracle re-derives every count from the
   //  assignment lattice.)
-  private val ivfFsckIndex = scala.collection.concurrent.TrieMap.empty[String, String]
   val q256IvfFsck: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val centroids = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cid"),
         Similarity.asDouble(col("embedding")).as("cvec"))
-    val path = ivfFsckIndex.getOrElseUpdate(dir,
-      java.nio.file.Files.createTempDirectory("graft_fsck").toString
-        + "/idx")
+    val path = graft.Staging.once(s"fsck|$dir")(
+      graft.Staging.scratch("graft_fsck").resolve("idx").toString)
     Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 16), centroids,
       path)
     emb.filter(col("vec_id") >= 16 && col("vec_id") < 23)
@@ -2179,12 +2170,7 @@ object ExtraQueries {
       .select(col("vec_id").as("q_id"),
         Similarity.asDouble(col("embedding")).as("qvec"))
     val corpus = emb.filter(col("vec_id") >= 16)
-    val path = ivfRecallIndex.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-ivf-recall-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Similarity.buildIvfIndex(corpus, centroids, p)
-      p
-    })
+    val path = ivfRecallIndex(dir, corpus, centroids)
     val exact = Similarity.bruteForceTopKBatch(corpus, queries, k = 5)
     Seq(1, 2, 4, 8).map { np =>
       val approx = Similarity

@@ -427,23 +427,25 @@ object OpsQueries {
     FROM a1 JOIN probes USING (cid), q
     ORDER BY cos_sim DESC, vec_id LIMIT 10"""
 
+  /** The IVF index over vec_id ≥ 16 that q43 and q60 share. */
+  private def ivfIndex(dir: String, emb: DataFrame, centroids: DataFrame): String = {
+    val path = graft.Staging.pathFor("graft-ivf-index", dir)
+    graft.Staging.once(path)(
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 16), centroids, path))
+    path
+  }
+
   // ————————————————————————————— ANN: IVF over a materialized index
   // (the 100 TB shape q25's scaladoc promises: assignment written once,
   //  partitioned by centroid_id; the search scans only probed partitions.
   //  Same parameters as q25 ⇒ same oracle SQL.)
-  private val ivfIndexBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
   val q43AnnIvfIndexed: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val centroids = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cid"), Similarity.asDouble(col("embedding")).as("cvec"))
     val queryDf = emb.filter(col("vec_id") === 0)
       .select(Similarity.asDouble(col("embedding")).as("qvec"))
-    val path = ivfIndexBuilt.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-ivf-index-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 16), centroids, p)
-      p
-    })
+    val path = ivfIndex(dir, emb, centroids)
     Similarity.ivfTopKIndexed(path, centroids, queryDf, k = 10, nProbe = 2)
   }
 
@@ -459,12 +461,7 @@ object OpsQueries {
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"),
         Similarity.asDouble(col("embedding")).as("qvec"))
-    val path = ivfIndexBuilt.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-ivf-index-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 16), centroids, p)
-      p
-    })
+    val path = ivfIndex(dir, emb, centroids)
     Similarity.ivfTopKIndexedBatch(path, centroids, queries, k = 5, nProbe = 2)
   }
   val q60Sql: String = """
@@ -1029,16 +1026,11 @@ object OpsQueries {
   // (same semantics through the MATERIALIZED index: candidates read the
   //  stored corpus band rows, verification shingles only matched docs;
   //  result = batch documents with no accepted near-dup)
-  private val nearDupIndexBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
   val q66DedupIngest: Q = (s, dir) => {
     val docs = Tables.documents(s, dir).filter(col("doc_id") < 1000)
     val corpus = docs.filter(col("doc_id") % 2 === 0)
-    val path = nearDupIndexBuilt.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-neardup-index-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Dedup.buildNearDupIndex(corpus, "text", "doc_id", p)
-      p
-    })
+    val path = graft.Staging.pathFor("graft-neardup-index", dir)
+    graft.Staging.once(path)(Dedup.buildNearDupIndex(corpus, "text", "doc_id", path))
     Dedup.dedupBatchAgainstIndex(docs.filter(col("doc_id") % 2 === 1), corpus,
       path, "text", "doc_id", threshold = 0.5)
       .select(col("doc_id"))
@@ -1808,14 +1800,12 @@ object OpsQueries {
   //  argmin encoding, ADC ranking, re-rank — not just the final top-k.)
   // codebook training is per-corpus, not per-query — cache it per dir the
   // way q80 caches its index build, so repeated q78 runs measure search
-  private val pqCodebookTrained =
-    scala.collection.concurrent.TrieMap.empty[String, Pq.Codebook]
   val q78PqAnn: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val queryDf = emb.filter(col("vec_id") === 0)
       .select(Similarity.asDouble(col("embedding")).as("qvec"))
     val corpus = emb.filter(col("vec_id") > 0)
-    val cb = pqCodebookTrained.getOrElseUpdate(dir,
+    val cb = graft.Staging.once(s"pq-codebook|$dir")(
       Pq.trainCodebooks(corpus, m = 8, ksub = 32))
     Pq.pqTopKWithCodebook(corpus, cb, queryDf, k = 10, rerankFactor = 8)
   }
@@ -1869,7 +1859,6 @@ object OpsQueries {
   //  full precision. Oracle = q25's coarse assignment/probe CTEs
   //  composed with q78's deterministic PQ chain, restricted to probed
   //  buckets.)
-  private val ivfPqIndexBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
   val q80IvfPqAnn: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val centroids = emb.filter(col("vec_id") < 16)
@@ -1877,12 +1866,9 @@ object OpsQueries {
     val corpus = emb.filter(col("vec_id") >= 16)
     val queryDf = emb.filter(col("vec_id") === 0)
       .select(Similarity.asDouble(col("embedding")).as("qvec"))
-    val path = ivfPqIndexBuilt.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-ivfpq-index-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}").toString
-      Pq.buildIvfPqIndex(corpus, centroids, p, m = 8, ksub = 32)
-      p
-    })
+    val path = graft.Staging.pathFor("graft-ivfpq-index", dir)
+    graft.Staging.once(path)(
+      Pq.buildIvfPqIndex(corpus, centroids, path, m = 8, ksub = 32))
     Pq.ivfPqTopKIndexed(path, centroids, corpus, queryDf, k = 10,
       nProbe = 2, rerankFactor = 3)
   }
@@ -4233,8 +4219,7 @@ object OpsQueries {
         col("event_id") < 900)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val batches = (0 until 3).map(k => rows.filter(_._1 % 3 == k).toSeq)
-    val path = java.nio.file.Files.createTempDirectory("graft-hll")
-      .resolve("regs.parquet").toString
+    val path = graft.Staging.scratch("graft-hll").resolve("regs.parquet").toString
     graft.streaming.StreamingSketch.distinctUsersInBatches(s, batches, path)
   }
   private val q196Sql: String = """

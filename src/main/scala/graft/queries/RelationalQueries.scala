@@ -900,8 +900,7 @@ object RelationalQueries {
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
     val batches = (0 until 3).map(k => rows.filter(_._1 % 3 == k).toSeq)
-    val path = java.nio.file.Files.createTempDirectory("graft-rollup")
-      .resolve("state.parquet").toString
+    val path = graft.Staging.scratch("graft-rollup").resolve("state.parquet").toString
     graft.streaming.StreamingRollup.rollupInBatches(s, batches, path)
   }
   // streamed view ≡ one-shot batch recompute over the same bounded id range

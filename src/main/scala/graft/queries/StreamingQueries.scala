@@ -83,8 +83,7 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir).filter(col("doc_id") < 1000)
       .select(col("doc_id"), col("text"))
     val evens = docs.filter(col("doc_id") % 2 === 0)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-stream-neardup").toString
+    val base = graft.Staging.scratch("graft-stream-neardup").toString
     val accepted = s"$base/accepted.parquet"
     val index = s"$base/index.parquet"
     evens.write.mode("overwrite").parquet(accepted)
@@ -205,8 +204,7 @@ object StreamingQueries {
       .localCheckpoint(true)
     val queryDf = emb.filter(col("vec_id") === 0)
       .select(Similarity.asDouble(col("embedding")).as("qvec"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-stream-ivf").resolve("index.parquet").toString
+    val path = graft.Staging.scratch("graft-stream-ivf").resolve("index.parquet").toString
     val rows = emb.filter(col("vec_id") >= 16)
       .select(col("vec_id"), Similarity.asDouble(col("embedding")))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)

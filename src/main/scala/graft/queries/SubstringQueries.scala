@@ -37,11 +37,11 @@ object SubstringQueries {
     * content hash would cost the very scan the staging avoids) plus the
     * (L, K) parameters. A regenerated corpus changes mtimes → new key →
     * fresh staging; a torn previous write (no `_SUCCESS`) is discarded.
-    * Same per-JVM-idempotent-staging discipline as q55's zstd landing
-    * zone, and the bench warm-up covers the one-time write the same
-    * way (`Bench.warmups` runs q363 ahead of the timed region).
+    * The check-and-write runs once per JVM per staging path through
+    * [[graft.Staging.once]], like q55's zstd landing zone, and the bench
+    * warm-up covers the one-time write the same way (`Bench.warmups`
+    * runs q363 ahead of the timed region).
     */
-  private val stagingLock = new Object
   private def stagedSpans(s: SparkSession, dir: String): DataFrame = {
     val conf = s.sessionState.newHadoopConf()
     val src = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
@@ -52,9 +52,8 @@ object SubstringQueries {
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    val stage = java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"), s"graft-spans-$fp-L$L-K$K").toString
-    stagingLock.synchronized {
+    val stage = graft.Staging.path(s"graft-spans-$fp-L$L-K$K").toString
+    graft.Staging.once(stage) {
       val stagePath = new org.apache.hadoop.fs.Path(stage)
       val done = new org.apache.hadoop.fs.Path(stage + "/_SUCCESS")
       val lfs = stagePath.getFileSystem(conf)

@@ -33,10 +33,8 @@ object TextArchiveQueries {
     SyntheticTextArchive.dirFor(n).resolve("_staged")
       .resolve("members.parquet").toString
 
-  private val stagedOnce = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
-
   private def stage(s: SparkSession, n: Int): Unit =
-    stagedOnce.getOrElseUpdate(n, {
+    graft.Staging.once(stagedPath(n)) {
       // cross-JVM memo (round 15): the staging is deterministic in n, so
       // a finished _SUCCESS-marked write is reused instead of re-paying
       // a 20M-row parquet write per probe JVM at the sf10 decade
@@ -49,8 +47,7 @@ object TextArchiveQueries {
             col("mtimeMs").as("mtime_ms"), col("text"))
           .coalesce(4).write.mode("overwrite").parquet(stagedPath(n))
       }
-      true
-    })
+    }
 
   private def scan(s: SparkSession, dir: String): DataFrame = {
     val n = rowsFor(dir)

@@ -30,14 +30,12 @@ object WarcQueries {
   private def stagedPath(n: Int): String =
     SyntheticWarc.dirFor(n).resolve("_staged").resolve("records.parquet").toString
 
-  private val stagedOnce = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
-
-  /** Stage the corpus's logical records as parquet for the DuckDB side —
-    * generated distributed (`spark.range` → `record(i)`), never re-read
-    * from the `.warc.gz` containers.
+  /** Stage the corpus's logical records as parquet for the DuckDB side,
+    * once per JVM — generated distributed (`spark.range` → `record(i)`),
+    * never re-read from the `.warc.gz` containers.
     */
   private def stage(s: SparkSession, n: Int): Unit =
-    stagedOnce.getOrElseUpdate(n, {
+    graft.Staging.once(stagedPath(n)) {
       import s.implicits._
       s.range(n).map(i => SyntheticWarc.record(i))
         .select(col("i"), col("warcType").as("warc_type"),
@@ -45,8 +43,7 @@ object WarcQueries {
           col("dateMs").as("date_ms"), col("contentType").as("content_type"),
           col("payloadText").as("payload_text"))
         .coalesce(4).write.mode("overwrite").parquet(stagedPath(n))
-      true
-    })
+    }
 
   private def scan(s: SparkSession, dir: String): DataFrame = {
     val n = rowsFor(dir)

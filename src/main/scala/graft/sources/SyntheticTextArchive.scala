@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.zip.{CRC32, GZIPOutputStream, ZipEntry, ZipOutputStream}
 
 import scala.collection.parallel.CollectionConverters._
@@ -162,24 +162,24 @@ object SyntheticTextArchive {
     dir.resolve("archive-*").toString
   }
 
-  def dirFor(n: Int): Path =
-    Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-txtar-$n-f$files")
+  def dirFor(n: Int): Path = graft.Staging.path(s"graft-synth-txtar-$n-f$files")
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[Int, String]
-
-  /** Cached per-JVM dataset keyed by member count. */
+  /** The corpus glob for `n` members, written once per JVM
+    * ([[graft.Staging.once]]); `writeDataset`'s marker adds the
+    * cross-JVM reuse.
+    */
   def dataset(n: Int): String =
-    cache.getOrElseUpdate(n, writeDataset(dirFor(n), n))
+    graft.Staging.once(dirFor(n).toString)(writeDataset(dirFor(n), n))
 
   /** ONE zip holding all `n` members — the corpus shape the central-
     * directory-driven SPLITTABLE read exists for (a single multi-GB
     * dump zip that must still parallelize). Same member lattice as
     * [[dataset]], so the same staging table oracles both layouts.
     */
-  def singleZip(n: Int): String =
-    singleZipCache.getOrElseUpdate(n, {
-      val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-txtar1z-$n")
-      val f = dir.resolve("corpus.zip")
+  def singleZip(n: Int): String = {
+    val dir = graft.Staging.path(s"graft-synth-txtar1z-$n")
+    val f = dir.resolve("corpus.zip")
+    graft.Staging.once(f.toString) {
       val marker = dir.resolve("_COMPLETE")
       if (!Files.exists(marker)) { // same cross-JVM memo as writeDataset
         Files.createDirectories(dir)
@@ -191,8 +191,7 @@ object SyntheticTextArchive {
         } finally z.close()
         Files.write(marker, Array.emptyByteArray)
       }
-      f.toString
-    })
-
-  private val singleZipCache = scala.collection.concurrent.TrieMap.empty[Int, String]
+    }
+    f.toString
+  }
 }

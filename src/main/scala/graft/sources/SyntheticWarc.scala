@@ -4,7 +4,7 @@ import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
 
 import scala.collection.parallel.CollectionConverters._
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
 /** Deterministic synthetic WARC/WET corpus generator (main scope — the
@@ -168,7 +168,6 @@ object SyntheticWarc {
   }
 
   private val files = 8
-  private val cache = scala.collection.concurrent.TrieMap.empty[Int, String]
 
   /** Deterministic corpus dir for `n` records; `_staged/` under it holds
     * the oracle's parquet truth (shared naming discipline with
@@ -181,8 +180,9 @@ object SyntheticWarc {
   private val genVersion = 2
 
   def dirFor(n: Int): Path =
-    Paths.get(sys.props("java.io.tmpdir"), s"graft-synth-warc-v$genVersion-$n-f$files")
+    graft.Staging.path(s"graft-synth-warc-v$genVersion-$n-f$files")
 
+  /** The corpus glob for `n` records, written once per JVM. */
   def dataset(n: Int): String =
-    cache.getOrElseUpdate(n, writeDataset(dirFor(n), n, files))
+    graft.Staging.once(dirFor(n).toString)(writeDataset(dirFor(n), n, files))
 }

@@ -108,7 +108,7 @@ object StreamingSessions {
     } finally {
       spark.conf.set(noDataKey, oldNoData)
       spark.conf.set(partsKey, oldParts)
-      deleteRecursively(checkpoint) // bounded drain: state is one-shot,
+      graft.Staging.deleteTree(checkpoint) // bounded drain: state is one-shot,
       // so the checkpoint has no replay value — leaving it would
       // accumulate one orphan ckpt-* dir per bench/test invocation
     }
@@ -117,18 +117,6 @@ object StreamingSessions {
     spark.catalog.dropTempView(tableName)
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), sink.schema)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      // Files.walk must be closed — each leaked stream holds a directory
-      // handle until GC, and on some filesystems blocks the deletes
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
   }
 
   /** Drain the session-window aggregation over the whole file source. */

@@ -3,11 +3,11 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -93,25 +93,7 @@ case class BootstrapWeights(child: Expression, reps: Int)
 }
 
 object BootstrapExpressions {
-  val functionName = "bootstrap_weights"
-
-  private[functions] def builder(exprs: Seq[Expression]): Expression =
-    BootstrapWeights(exprs.head, exprs(1).eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"bootstrap_weights reps must be an integer literal, got $other")
-    })
-
-  /** Idempotent per-session registration (temp function). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, builder, "scala_udf")
-
-  /** Column-level weight vector; registers on the thread's ACTIVE
-    * session (the SimhashExpressions discipline). */
-  def bootstrapWeights(id: Column, reps: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(functionName, id, lit(reps))
-  }
+  /** Column-level weight vector over a string id column. */
+  def bootstrapWeights(id: Column, reps: Int): Column =
+    column(BootstrapWeights(expression(id), reps))
 }

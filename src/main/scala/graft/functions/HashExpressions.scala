@@ -2,10 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -74,40 +74,12 @@ case class Md5Slice64(child: Expression, pos: Int, hexLen: Int)
 }
 
 object HashExpressions {
-  val functionName = "md5_slice64"
-
-  private[functions] def builder(exprs: Seq[Expression]): Expression = {
-    // arity check FIRST: without it a wrong-arity SQL call dies with an
-    // IndexOutOfBoundsException instead of a function-signature error
-    if (exprs.length != 3) throw new IllegalArgumentException(
-      s"md5_slice64 expects exactly 3 arguments (col, pos, len), " +
-        s"got ${exprs.length}")
-    def intLit(e: Expression): Int = e.eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"md5_slice64 parameters must be integer literals, got $other")
-    }
-    Md5Slice64(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-  }
-
-  /** Idempotent per-session registration (temp function). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, builder, "scala_udf")
-
   /** `conv(substring(md5(c), pos, len), 16, 10).cast("long")`, natively.
     * `c` must already be a string column (every lattice site casts its
     * id explicitly, keeping the hashed bytes pinned cross-engine).
     */
-  def md5Hex64(c: Column, pos: Int, len: Int): Column = {
-    // fall back to the default session so a Column built off-thread
-    // (no active session on the calling thread) still registers instead
-    // of deferring to an opaque "undefined function" analysis error
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function(functionName, c, lit(pos), lit(len))
-  }
+  def md5Hex64(c: Column, pos: Int, len: Int): Column =
+    column(Md5Slice64(expression(c), pos, len))
 
   /** The common prefix form: hex digits [1, len]. */
   def md5Prefix64(c: Column, len: Int): Column = md5Hex64(c, 1, len)

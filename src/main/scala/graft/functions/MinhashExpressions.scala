@@ -2,11 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -113,28 +113,7 @@ case class MinhashBandSigs(child: Expression, numHashes: Int, rowsPerBand: Int)
 }
 
 object MinhashExpressions {
-  val functionName = "minhash_band_sigs"
-
-  private[functions] def builder(exprs: Seq[Expression]): Expression = {
-    def intLit(e: Expression): Int = e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"minhash_band_sigs parameters must be integer literals, got $other")
-    }
-    MinhashBandSigs(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-  }
-
-  /** Idempotent per-session registration (temp function). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, builder, "scala_udf")
-
-  /** Column-level band signatures; registers on the thread's active
-    * session like [[SimhashExpressions.simhash]].
-    */
-  def bandSigs(shingles: Column, numHashes: Int, rowsPerBand: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(functionName, shingles, lit(numHashes), lit(rowsPerBand))
-  }
+  /** Column-level band signatures over a shingle-array column. */
+  def bandSigs(shingles: Column, numHashes: Int, rowsPerBand: Int): Column =
+    column(MinhashBandSigs(expression(shingles), numHashes, rowsPerBand))
 }

@@ -3,13 +3,13 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.ByteOrder
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native second-moment (outer-product-sum) aggregate: ONE pass over
@@ -112,20 +112,9 @@ case class OuterProductSumAgg(
 }
 
 object MomentExpressions {
-  val functionName = "graft_outer_product_sum"
-
-  /** Idempotent per-session registration (temp function — the
-    * BloomFunctions/BootstrapExpressions discipline).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, exprs => OuterProductSumAgg(exprs.head), "scala_udf")
-
   /** Column-level packed second-moment aggregate over an `array<long>`
-    * column; registers on the thread's ACTIVE session.
+    * column.
     */
-  def outerProductSum(xs: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(functionName, xs)
-  }
+  def outerProductSum(xs: Column): Column =
+    column(OuterProductSumAgg(expression(xs)).toAggregateExpression())
 }

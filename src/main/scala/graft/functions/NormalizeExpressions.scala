@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (or singleton variants like U+2126 OHM vs U+03A9 OMEGA) otherwise
   * hashes to different groups.
   *
-  * `form` must be a literal ("NFC"/"NFD"/"NFKC"/"NFKD") — it selects
+  * `form` ("NFC"/"NFD"/"NFKC"/"NFKD") is a plan constant — it selects
   * the resolved `java.text.Normalizer.Form` constant at plan time, not
   * per row. Null input → null.
   */
@@ -50,24 +50,9 @@ case class UnicodeNormalize(child: Expression, form: String)
 }
 
 object NormalizeExpressions {
-  val functionName = "graft_unicode_normalize"
-
-  /** 1-arg → NFC; 2-arg → (text, 'FORM') with a foldable string form. */
-  def builder(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(c) => UnicodeNormalize(c, "NFC")
-    case Seq(c, f) if f.foldable =>
-      UnicodeNormalize(c, f.eval().asInstanceOf[UTF8String].toString)
-    case _ => throw new IllegalArgumentException(
-      s"$functionName(text[, form-literal])")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, builder, "scala_udf")
-
-  /** NFC-normalized column; requires [[register]] on the session. */
-  def nfc(text: Column): Column = call_function(functionName, text)
+  /** NFC-normalized column. */
+  def nfc(text: Column): Column = normalize(text, "NFC")
 
   def normalize(text: Column, form: String): Column =
-    call_function(functionName, text, lit(form))
+    column(UnicodeNormalize(expression(text), form))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native repetition statistics over a token array: occurrence count of
@@ -85,13 +85,7 @@ case class RepetitionStats(child: Expression)
 }
 
 object RepetitionExpressions {
-  val functionName = "graft_repetition_stats"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, exprs => RepetitionStats(exprs(0)), "scala_udf")
-
-  /** Column-level stats struct; requires [[register]] on the session. */
+  /** Column-level stats struct over a token-array column. */
   def repetitionStats(words: Column): Column =
-    call_function(functionName, words)
+    column(RepetitionStats(expression(words)))
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native SimHash digest over a token array.
@@ -88,28 +88,7 @@ case class SimhashDigest(child: Expression, bits: Int)
 }
 
 object SimhashExpressions {
-  val functionName = "simhash_digest"
-
-  private[functions] def builder(exprs: Seq[Expression]): Expression =
-    SimhashDigest(exprs.head, exprs(1).eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"simhash_digest bits must be an integer literal, got $other")
-    })
-
-  /** Idempotent per-session registration (temp function). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, builder, "scala_udf")
-
-  /** Column-level digest over a token-array column. Registers on the
-    * thread's ACTIVE session so the `Dedup` entry points stay plain
-    * Column functions — columns are always built on the driver with an
-    * active session (queries, specs, entry points alike).
-    */
-  def simhash(tokens: Column, bits: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(functionName, tokens, lit(bits))
-  }
+  /** Column-level digest over a token-array column. */
+  def simhash(tokens: Column, bits: Int): Column =
+    column(SimhashDigest(expression(tokens), bits))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -102,21 +102,7 @@ case class JaroWinkler(left: Expression, right: Expression)
 }
 
 object StringSimilarityExpressions {
-  val jaroWinklerName = "jaro_winkler"
-
-  private[functions] def builder(exprs: Seq[Expression]): Expression =
-    JaroWinkler(exprs.head, exprs(1))
-
-  /** Idempotent per-session registration (temp function). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      jaroWinklerName, builder, "scala_udf")
-
-  /** Column-level similarity; registers on the thread's active session
-    * like [[SimhashExpressions.simhash]].
-    */
-  def jaroWinkler(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(jaroWinklerName, a, b)
-  }
+  /** Column-level similarity of two string columns. */
+  def jaroWinkler(a: Column, b: Column): Column =
+    column(JaroWinkler(expression(a), expression(b)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst dot product over two `array<double>` columns.
@@ -138,90 +137,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  val functionName = "dot_product"
-  val cosineName = "cosine_sim"
+  /** Column-level dot product. */
+  def dotProduct(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  /** Idempotent per-session registration (temp functions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      cosineName, exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-  }
-
-  /** Column-level dot product; requires [[register]] (or the extensions
-    * class below) on the session.
-    */
-  def dotProduct(a: Column, b: Column): Column = call_function(functionName, a, b)
-
-  /** Column-level fused cosine similarity; requires [[register]]. */
-  def cosineSim(a: Column, b: Column): Column = call_function(cosineName, a, b)
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` registers the
-  * engine's native functions at session build (production route; tests
-  * and entry points may also call the per-object `register`s). The
-  * injection list is public so a test can install the SAME tuples into
-  * an existing session's registry — `getOrCreate` in a shared-session
-  * JVM silently ignores the extensions config, so an in-suite test
-  * through the builder would only ever see functions other tests
-  * happened to register.
-  */
-object GraftExtensions {
-  val injections: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier(VectorExpressions.functionName),
-      new ExpressionInfo(classOf[DotProduct].getName, VectorExpressions.functionName),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))),
-    (FunctionIdentifier(VectorExpressions.cosineName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, VectorExpressions.cosineName),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))),
-    (FunctionIdentifier(SimhashExpressions.functionName),
-      new ExpressionInfo(classOf[SimhashDigest].getName, SimhashExpressions.functionName),
-      SimhashExpressions.builder _),
-    (FunctionIdentifier(MinhashExpressions.functionName),
-      new ExpressionInfo(classOf[MinhashBandSigs].getName, MinhashExpressions.functionName),
-      MinhashExpressions.builder _),
-    (FunctionIdentifier(WinnowingExpressions.functionName),
-      new ExpressionInfo(classOf[WinnowingFingerprints].getName,
-        WinnowingExpressions.functionName),
-      WinnowingExpressions.builder _),
-    (FunctionIdentifier(WinnowingExpressions.anchorsName),
-      new ExpressionInfo(classOf[WinnowingAnchors].getName,
-        WinnowingExpressions.anchorsName),
-      WinnowingExpressions.anchorsBuilder _),
-    (FunctionIdentifier(WinnowingExpressions.extendName),
-      new ExpressionInfo(classOf[ExtendMatch].getName,
-        WinnowingExpressions.extendName),
-      WinnowingExpressions.extendBuilder _),
-    (FunctionIdentifier(RepetitionExpressions.functionName),
-      new ExpressionInfo(classOf[RepetitionStats].getName,
-        RepetitionExpressions.functionName),
-      (exprs: Seq[Expression]) => RepetitionStats(exprs(0))),
-    (FunctionIdentifier(NormalizeExpressions.functionName),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName,
-        NormalizeExpressions.functionName),
-      NormalizeExpressions.builder _),
-    (FunctionIdentifier(BootstrapExpressions.functionName),
-      new ExpressionInfo(classOf[BootstrapWeights].getName,
-        BootstrapExpressions.functionName),
-      BootstrapExpressions.builder _),
-    (FunctionIdentifier(BloomFunctions.aggName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        BloomFunctions.aggName),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier(BloomFunctions.mightContainName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        BloomFunctions.mightContainName),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))))
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftExtensions.injections.foreach(e.injectFunction)
+  /** Column-level fused cosine similarity. */
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -225,63 +225,15 @@ case class ExtendMatch(a: Expression, b: Expression,
 }
 
 object WinnowingExpressions {
-  val functionName = "winnowing_fps"
+  /** Column-level fingerprint set of a text column. */
+  def fingerprints(text: Column, k: Int, w: Int): Column =
+    column(WinnowingFingerprints(expression(text), k, w))
 
-  private[functions] def builder(exprs: Seq[Expression]): Expression = {
-    def intLit(e: Expression): Int = e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"winnowing_fps parameters must be integer literals, got $other")
-    }
-    WinnowingFingerprints(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-  }
-
-  /** Idempotent per-session registration (temp function). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      functionName, builder, "scala_udf")
-
-  /** Column-level fingerprint set; registers on the thread's active
-    * session like [[SimhashExpressions.simhash]].
-    */
-  def fingerprints(text: Column, k: Int, w: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(functionName, text, lit(k), lit(w))
-  }
-
-  val anchorsName = "winnowing_anchors"
-  val extendName = "extend_match"
-
-  private[functions] def anchorsBuilder(exprs: Seq[Expression]): Expression = {
-    def intLit(e: Expression): Int = e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"winnowing_anchors parameters must be integer literals, got $other")
-    }
-    WinnowingAnchors(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-  }
-
-  private[functions] def extendBuilder(exprs: Seq[Expression]): Expression =
-    ExtendMatch(exprs(0), exprs(1), exprs(2), exprs(3))
-
-  def registerAnchors(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      anchorsName, anchorsBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      extendName, extendBuilder, "scala_udf")
-  }
-
-  /** Column-level (pos, fp) anchor array; registers on the active session. */
-  def anchors(text: Column, k: Int, w: Int): Column = {
-    SparkSession.getActiveSession.foreach(registerAnchors)
-    call_function(anchorsName, text, lit(k), lit(w))
-  }
+  /** Column-level (pos, fp) anchor array of a text column. */
+  def anchors(text: Column, k: Int, w: Int): Column =
+    column(WinnowingAnchors(expression(text), k, w))
 
   /** Column-level maximal-run extension around an anchor alignment. */
-  def extendMatch(a: Column, b: Column, pa: Column, pb: Column): Column = {
-    SparkSession.getActiveSession.foreach(registerAnchors)
-    call_function(extendName, a, b, pa, pb)
-  }
+  def extendMatch(a: Column, b: Column, pa: Column, pb: Column): Column =
+    column(ExtendMatch(expression(a), expression(b), expression(pa), expression(pb)))
 }

@@ -153,7 +153,6 @@ object Cleaning {
     */
   def repetitionFilter(df: DataFrame, textCol: String, idCol: String,
       maxTopWordFrac: Double = 0.2, maxDupBigramFrac: Double = 0.7): DataFrame = {
-    graft.functions.RepetitionExpressions.register(df.sparkSession)
     val metrics = repetitionMetrics(col("_st"), size(col("_w")))
     val withM = df
       .select(col(idCol).as("id"), TextOps.words(col(textCol)).as("_w"))
@@ -181,7 +180,6 @@ object Cleaning {
       lang: Option[String] = None,
       maxTopWordFrac: Double = 0.2, maxDupBigramFrac: Double = 0.7,
       spanWords: Int = 8): DataFrame = {
-    graft.functions.RepetitionExpressions.register(df.sparkSession)
     val q = TextOps.qualityFilter(df, textCol, minWords, maxWords,
       minStopwordRatio, minAlphaRatio, lang)
     val metrics = repetitionMetrics(col("_st"), size(col("_w"))).toMap

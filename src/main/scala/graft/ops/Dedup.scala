@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.GraftColumns.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -39,7 +43,6 @@ object Dedup {
     * one map-side-combined exchange on a 16-byte digest.
     */
   def exactGroupsNormalized(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.NormalizeExpressions.register(df.sparkSession)
     df.groupBy(TextOps.fingerprint(
         graft.functions.NormalizeExpressions.nfc(col(textCol))).as("fp"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("group_size"))
@@ -1407,8 +1410,6 @@ object Dedup {
   def simhash64(text: Column): Column =
     graft.functions.SimhashExpressions.simhash(TextOps.words(text), 64)
 
-  private val bloomViewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Bloom-prefiltered novelty admission: the rows of `batch` whose
     * `keyCol` never occurs in `corpus` — the result is EXACT (identical
     * to a plain anti-join); the Bloom filter is a pure pruning layer.
@@ -1428,7 +1429,9 @@ object Dedup {
     * reuse) because `BloomFilterMightContain` accepts only literal or
     * subquery bloom inputs — a cross-joined bloom column is rejected by
     * its type check, and a driver-collected literal would put megabytes
-    * of bitmap into the plan.
+    * of bitmap into the plan. Both expressions are Spark-native Catalyst
+    * code (the ones `spark.sql.optimizer.runtime.bloomFilter` injects),
+    * built here as Columns straight from their expressions.
     *
     * `expectedItems` sizes the filter (bits from Spark's own optimal-bits
     * formula at `fpp`); an undersized filter degrades fpp — more rows
@@ -1441,33 +1444,22 @@ object Dedup {
     // surface as a confusing AnalysisException several operators later
     require(!batch.columns.contains("_maybe"),
       "_maybe is a reserved column name in bloomAdmission inputs")
-    // keyCol is interpolated into SQL inside backticks — a backtick in
-    // the name would escape the quoting
+    // a backtick in the name would be read as quoting by the column
+    // resolver, not as part of the name
     require(!keyCol.contains("`"), s"keyCol must not contain backticks: $keyCol")
-    val spark = batch.sparkSession
-    graft.functions.BloomFunctions.register(spark)
-    val n = bloomViewCounter.incrementAndGet()
-    val batchView = s"graft_bloom_batch_$n"
-    val corpusView = s"graft_bloom_corpus_$n"
-    batch.createOrReplaceTempView(batchView)
-    corpus.select(col(keyCol)).createOrReplaceTempView(corpusView)
-    val bits = graft.functions.BloomFunctions.optimalNumBits(expectedItems, fpp)
-    // spark.sql analyzes eagerly, so the views are resolved into the plan
-    // here and safe to drop right after
+    val bits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
+    val bloom = corpus.select(column(new BloomFilterAggregate(
+        expression(xxhash64(col(keyCol))), Literal(expectedItems), Literal(bits))
+      .toAggregateExpression())).scalar()
     // coalesce: an EMPTY corpus aggregates to a null bloom and
     // might_contain(null, x) is null — without the default both the
     // NOT-maybe and the maybe branch would drop every row (admitted = ∅
     // where the exact answer is "everything"); null means "nothing was
     // folded in", i.e. definitely new
-    val flagged = spark.sql(s"""
-      SELECT b.*, coalesce(${graft.functions.BloomFunctions.mightContainName}(
-        (SELECT ${graft.functions.BloomFunctions.aggName}(
-           xxhash64(`$keyCol`), ${expectedItems}L, ${bits}L)
-         FROM $corpusView),
-        xxhash64(b.`$keyCol`)), false) AS _maybe
-      FROM $batchView b""")
-    spark.catalog.dropTempView(batchView)
-    spark.catalog.dropTempView(corpusView)
+    val flagged = batch.withColumn("_maybe", coalesce(
+      column(BloomFilterMightContain(expression(bloom),
+        expression(xxhash64(batch(keyCol))))),
+      lit(false)))
     val definiteNew = flagged.where(!col("_maybe")).drop("_maybe")
     val rescuedFalsePositives = flagged.where(col("_maybe")).drop("_maybe")
       .join(corpus.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")

@@ -270,7 +270,6 @@ object Pq {
       rerankFactor: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val spark = centroids.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val cb = loadCodebooks(spark, codebookPath(indexPath))
     val q = queryDf.select(col("qvec")).head.getSeq[Double](0).toSeq
     val probed = centroids.crossJoin(broadcast(queryDf))
@@ -315,7 +314,6 @@ object Pq {
   def pqTopKWithCodebook(vectors: DataFrame, cb: Codebook, queryDf: DataFrame,
       k: Int, rerankFactor: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val q = queryDf.select(col("qvec")).head.getSeq[Double](0).toSeq
     val cand = vectors
       .select(col(idCol), col(vecCol),

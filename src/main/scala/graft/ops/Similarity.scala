@@ -83,7 +83,6 @@ object Similarity {
         if (md5Hex(s"rp|$seed|$o|$d").charAt(0) <= '7') 1.0 else -1.0
       })
     }
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val microRaw = transform(asDouble(col(vecCol)), x => round(x * 1000000))
     // the dot kernel SKIPS null elements — guard loudly first, so a null
     // element or over-limit input can never become a silently-wrong sum
@@ -177,17 +176,15 @@ object Similarity {
         col("n_outliers"))
   }
 
-  /** Sequential-fold dot product via higher-order functions — portable
-    * (works on any session, no registration). The DataFrame-level
-    * operators below use the codegen'd [[graft.functions.DotProduct]]
-    * instead; both fold left-to-right, so results are identical.
+  /** Sequential-fold dot product via higher-order functions — the
+    * checked reference definition. The DataFrame-level operators below
+    * use the codegen'd [[graft.functions.DotProduct]] instead; both fold
+    * left-to-right, so results are identical.
     */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** Codegen'd dot product (requires VectorExpressions.register on the
-    * session — the DataFrame-level entry points below do it).
-    */
+  /** Codegen'd dot product ([[graft.functions.DotProduct]]). */
   def fastDot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dotProduct(a, b)
 
@@ -208,7 +205,6 @@ object Similarity {
     */
   def bruteForceTopK(vectors: DataFrame, queryDf: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     vectors
       .crossJoin(broadcast(queryDf))
       .select(col(idCol), round(fastCosine(asDouble(col(vecCol)), col("qvec")), 4).as("cos_sim"))
@@ -224,7 +220,6 @@ object Similarity {
     */
   def bruteForceTopKBatch(vectors: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("cos_sim").desc, col(idCol))
     vectors.crossJoin(broadcast(queries))
@@ -297,7 +292,6 @@ object Similarity {
   def mipsTopKBatch(vectors: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val dec = "decimal(38,0)"
     val bandW = 1000000000000L
     def micro(c: Column) = transform(asDouble(c), x => round(x * 1000000))
@@ -359,7 +353,6 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("a_id").orderBy(col("cos_sim").desc, col(idCol))
     corpus.crossJoin(broadcast(anchors))
@@ -409,7 +402,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0; got $k, $rounds")
     require(initOffsets.nonEmpty, "need at least one init offset")
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val m = emb.select(col(idCol).cast("long").as("id"),
         transform(asDouble(col(vecCol)), x => round(x * 1000000)).as("m"))
       .withColumn("nsq", fastDot(col("m"), col("m")))
@@ -481,7 +473,6 @@ object Similarity {
   def ivfIndexFsck(spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val idx = spark.read.parquet(path)
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         col("centroid_id").cast("long").as("dir"))
@@ -539,7 +530,6 @@ object Similarity {
     */
   def assignToCentroids(vectors: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     // one array row of (cid, cvec) structs, cid-ascending (cid is unique,
     // so the struct sort is a cid sort); bounded by index design, exactly
     // like the broadcast of the centroid table it replaces
@@ -1348,7 +1338,6 @@ object Similarity {
       queryDf: DataFrame, k: Int, nProbe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val spark = centroids.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val probed = centroids.crossJoin(broadcast(queryDf))
       .select(col("cid"), fastCosine(col("cvec"), col("qvec")).as("c"))
       .orderBy(col("c").desc, col("cid"))
@@ -1378,7 +1367,6 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val spark = centroids.sparkSession
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // Q × nProbe pairs, driver-collected like the single-query path —
     // bounded by index design, and the probed-id union must be literals
     // to reach the parquet source as PartitionFilters
@@ -1414,7 +1402,6 @@ object Similarity {
       k: Int, nProbe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val assigned = assignToCentroids(vectors, centroids, idCol, vecCol)
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val probed = centroids.crossJoin(broadcast(queryDf))
       .select(col("cid"), fastCosine(col("cvec"), col("qvec")).as("c"))
       .orderBy(col("c").desc, col("cid"))
@@ -1470,7 +1457,6 @@ object Similarity {
   def quantizedTopK(vectors: DataFrame, queryDf: DataFrame, k: Int,
       rerankFactor: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     // dims-sized collect — bounded by index design, like centroid probes
     val params = quantizationParams(vectors, vecCol).orderBy("pos").collect()
     val mins = params.map(_.getDouble(1)).toSeq
@@ -1517,7 +1503,6 @@ object Similarity {
       dims: Int, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(numBits % bitsPerBand == 0,
       s"numBits ($numBits) must be a multiple of bitsPerBand ($bitsPerBand)")
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val hp = hyperplanes(vectors.sparkSession, numBits, dims)
     vectors.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .crossJoin(broadcast(hp))
@@ -1560,7 +1545,6 @@ object Similarity {
       numBits: Int = 16, bitsPerBand: Int = 4, dims: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val buckets = graft.ops.Dedup.pruneHotKeys(
       lshBandBuckets(vectors, numBits, bitsPerBand, dims, idCol, vecCol),
       Seq("band", "bucket"), maxBucket)
@@ -1577,7 +1561,6 @@ object Similarity {
     */
   def nearDupPairs(vectors: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val ids = vectors.select(col(idCol).as("id"))
     val candidates = ids.as("x").join(ids.as("y"), col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
@@ -1611,7 +1594,6 @@ object Similarity {
   def semanticDedup(vectors: DataFrame, centroids: DataFrame,
       threshold: Double, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val a = assignToCentroids(vectors, centroids, idCol, vecCol)
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("e"),
         col("centroid_id"))

@@ -18,7 +18,6 @@ class NormalizeSpec extends SparkSpec {
   private val pre = "Caf\u00e9"    // precomposed e-acute
 
   private def nfcOf(ss: String*): Seq[String] = {
-    NormalizeExpressions.register(spark)
     ss.toDF("t").select(NormalizeExpressions.nfc(col("t"))).as[String].collect().toSeq
   }
 
@@ -30,7 +29,6 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("null in -> null out; explicit form argument honored") {
-    NormalizeExpressions.register(spark)
     val r = Seq[(Option[String], Int)]((None, 0), (Some("\ufb01"), 1)) // fi ligature
       .toDF("t", "i").orderBy("i")
       .select(
@@ -43,7 +41,6 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("interpreted eval == codegen path") {
-    NormalizeExpressions.register(spark)
     val e = UnicodeNormalize(
       org.apache.spark.sql.catalyst.expressions.Literal(comb), "NFC")
     assert(e.eval(null).toString == pre)

@@ -8,7 +8,6 @@ class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("DotProduct matches the HOF fold bit-for-bit") {
-    VectorExpressions.register(spark)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(0.1, -0.2), Seq(0.3, 0.7)),
@@ -23,7 +22,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("DotProduct null semantics: null array -> null, length mismatch -> shorter") {
-    VectorExpressions.register(spark)
     val df = Seq(
       (Some(Seq(1.0, 2.0)), None: Option[Seq[Double]]),
       (Some(Seq(1.0, 2.0, 100.0)), Some(Seq(3.0, 4.0)))
@@ -34,7 +32,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("fused CosineSimilarity is bit-identical to the composed three-pass formula") {
-    VectorExpressions.register(spark)
     val emb = graft.queries.Tables.embeddings(spark, sf())
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val pairs = emb.as("x").crossJoin(emb.as("y"))
@@ -51,49 +48,19 @@ class VectorExpressionsSpec extends SparkSpec {
       s"fused ${r.getDouble(0)} != composed ${r.getDouble(1)}"))
   }
 
-  test("registration via GraftExtensions exposes dot_product to SQL") {
-    // same-JVM second session with the extensions class
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val r = s2.sql("SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
-      .collect().head.getDouble(0)
-    assert(r == 11.0)
-    // every native kernel the engine ships resolves through the same
-    // injection tuples (installed directly — in a shared-session JVM
-    // getOrCreate ignores the extensions config, so the SQL above only
-    // proves the builder route when this suite runs first)
-    GraftExtensions.injections.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    val fns = spark.sql(
-      """SELECT simhash_digest(array('a','b'), 16), minhash_band_sigs(array('a'), 12, 3),
-        |  winnowing_fps('abcdef', 3, 4),
-        |  graft_repetition_stats(array('a','a','b')).top_count,
-        |  graft_might_contain(CAST(null AS BINARY), xxhash64('x'))
-        |""".stripMargin).collect().head
-    assert(fns.getLong(3) == 2L)
-    assert(fns.isNullAt(4)) // null bloom -> null, the expression's contract
-  }
-
   test("float arrays are implicitly widened, not read as garbage strides") {
-    VectorExpressions.register(spark)
-    // a raw array<float> embedding column — the natural SQL call; the
-    // declared input types must widen it element-wise to array<double>
-    val r = spark.sql(
-      """SELECT
-        |  cosine_sim(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)),
-        |             array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS c,
-        |  dot_product(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)),
-        |              array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) AS d
-        |""".stripMargin).collect().head
+    // a raw array<float> embedding column; the declared input types
+    // must widen it element-wise to array<double>
+    val r = Seq((Seq(3.0f, 4.0f), Seq(1.0f, 2.0f))).toDF("a", "b").select(
+      VectorExpressions.cosineSim(col("a"), col("a")),
+      VectorExpressions.dotProduct(col("a"), col("b"))).collect().head
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(r.getDouble(1) == 11.0)
     // non-array input is an analysis error, not runtime garbage
-    intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT cosine_sim('not an array', array(1.0d))").collect()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq("not an array").toDF("s")
+        .select(VectorExpressions.cosineSim(col("s"), array(lit(1.0)))).collect()
     }
+    assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
   }
 }

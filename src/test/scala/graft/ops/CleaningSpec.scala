@@ -95,7 +95,6 @@ class CleaningSpec extends SparkSpec {
   test("native repetition stats ≡ HOF reference on real corpus") {
     val d = graft.queries.Tables.documents(spark, sf())
       .select(col("doc_id").as("id"), TextOps.words(col("text")).as("_w"))
-    graft.functions.RepetitionExpressions.register(spark)
     val hof = d.select(col("id") +: Cleaning.repetitionMetricsHof(col("_w"))
       .map { case (n, c) => c.as(n) }: _*)
     val native = d

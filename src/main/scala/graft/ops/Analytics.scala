@@ -1129,7 +1129,7 @@ object Analytics {
       .select(substring(col("v").cast("string"), 1, 1).cast("long").as("digit"))
     val counts = digits.groupBy(col("digit")).agg(count(lit(1)).as("n"))
     val total = counts.agg(sum(col("n")).as("n_total"))
-    broadcast(expected).join(counts, Seq("digit"), "left")
+    expected.join(counts, Seq("digit"), "left")
       .crossJoin(broadcast(total))
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
         col("n_total"),
@@ -1697,9 +1697,9 @@ object Analytics {
         Window.partitionBy("g").orderBy(col("rt").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("g"), col("rt"), col("n"))
-    val steps = deaths
-      .join(atRisk, deaths("g") === atRisk("g") && col("t") === col("rt"))
-      .select(deaths("g").as("g"), col("t"), col("d"), col("n"))
+    val steps = deaths.as("dth")
+      .join(atRisk.as("ar"), col("dth.g") === col("ar.g") && col("t") === col("rt"))
+      .select(col("dth.g").as("g"), col("t"), col("d"), col("n"))
     steps.groupBy("g")
       .agg(sort_array(collect_list(struct(col("t"), col("d"), col("n"))))
         .as("arr"))

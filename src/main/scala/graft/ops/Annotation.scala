@@ -165,10 +165,10 @@ object Annotation {
       .agg(count(lit(1)).as("ca"))
     val margB = co.groupBy("ann_a", "ann_b", "lb")
       .agg(count(lit(1)).as("cb"))
-    val pe = margA.join(margB,
-        margA("ann_a") === margB("ann_a") && margA("ann_b") === margB("ann_b")
-          && margA("la") === margB("lb"))
-      .groupBy(margA("ann_a").as("ann_a"), margA("ann_b").as("ann_b"))
+    val pe = margA.as("ma").join(margB.as("mb"),
+        col("ma.ann_a") === col("mb.ann_a") && col("ma.ann_b") === col("mb.ann_b")
+          && col("la") === col("lb"))
+      .groupBy(col("ma.ann_a").as("ann_a"), col("ma.ann_b").as("ann_b"))
       .agg(sum(col("ca") * col("cb")).as("pe_num"))
     base.join(pe, Seq("ann_a", "ann_b"), "left")
       .select(col("ann_a"), col("ann_b"), col("n"), col("n_agree"),

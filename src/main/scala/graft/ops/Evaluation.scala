@@ -555,7 +555,7 @@ object Evaluation {
     val nMin = a.agg(count(lit(1)).as("na"))
       .crossJoin(b.agg(count(lit(1)).as("nb")))
       .select(least(col("na"), col("nb")).as("n_min"))
-    broadcast(depths).join(overlaps, Seq("d"), "left")
+    depths.join(overlaps, Seq("d"), "left")
       .crossJoin(broadcast(nMin))
       .select(col("d"), col("n_min"),
         coalesce(col("o"), lit(0L)).as("o"))

@@ -902,7 +902,7 @@ object Graph {
     val ek = paired.crossJoin(broadcast(ks))
       .where(col("dx") > col("k") && col("dy") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_edges"))
-    broadcast(ks).join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
+    ks.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
       .select(col("k"),
         coalesce(col("n_nodes"), lit(0L)).as("n_nodes"),
         coalesce(col("n_edges"), lit(0L)).as("n_edges"))

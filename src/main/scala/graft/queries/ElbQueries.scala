@@ -140,8 +140,10 @@ object ElbQueries {
 
   // ——————————————————————— streaming ingest through the V2 source
   // (q45's rollup with `readStream.format("elb")` instead of the text
-  //  source + tokenize: the custom source's MicroBatchStream plans
-  //  file-count offsets over the sorted listing, its readers emit the
+  //  source + tokenize: the source's `FileListingStream` plans
+  //  file-count offsets over the sorted listing and pins the listing
+  //  when the AvailableNow run starts (a restart re-runs an uncommitted
+  //  batch, then drains what landed since), its readers emit the
   //  tokenized frame directly, and the SAME q45 oracle gates the
   //  result — the streaming path of the source sits under the hash
   //  check like its batch path does via q97.)

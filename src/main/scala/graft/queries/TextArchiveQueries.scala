@@ -132,11 +132,11 @@ object TextArchiveQueries {
     FROM sp GROUP BY 1"""
 
   // ————————————————————————————— streaming archive ingest (q397)
-  // (the same source through `readStream.format("textarchive")`:
-  //  file-count offsets over the sorted archive listing, drained
-  //  AvailableNow into a per-top-dir rollup — the q362 pattern; the
-  //  batch oracle equals the drain because the aggregation is
-  //  order-free.)
+  // (the same source through `readStream.format("textarchive")`: the
+  //  shared `FileListingStream`'s file-count offsets over the sorted
+  //  archive listing, drained AvailableNow up to the listing pinned at
+  //  run start into a per-top-dir rollup — the q362 pattern; the batch
+  //  oracle equals the drain because the aggregation is order-free.)
   private val streamCounter = new java.util.concurrent.atomic.AtomicLong()
   val q397ArchiveStream: Q = (s, dir) => {
     val n = rowsFor(dir)

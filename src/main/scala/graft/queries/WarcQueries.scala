@@ -129,8 +129,9 @@ object WarcQueries {
     GROUP BY 1"""
 
   // ————————————————————————————— streaming container ingest (q362)
-  // (the same source through `readStream.format("warc")`: file-count
-  //  offsets over the sorted container listing, drained AvailableNow
+  // (the same source through `readStream.format("warc")`: the shared
+  //  `FileListingStream`'s file-count offsets over the sorted container
+  //  listing, drained AvailableNow up to the listing pinned at run start
   //  into a per-host rollup — the q98 pattern; the batch oracle equals
   //  the drain because the aggregation is order-free.)
   private val streamCounter = new java.util.concurrent.atomic.AtomicLong()

@@ -42,13 +42,11 @@ object ArchiveAudit {
     * matches are ignored — tars have no central directory to audit).
     */
   def zipFsck(spark: SparkSession, pattern: String,
-      maxPayload: Long = TextArchiveDataSource.defaultMaxPayload): DataFrame = {
+      maxPayload: Long = FileListing.defaultMaxPayload): DataFrame = {
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val files = ElbDataSource.expand(Seq(pattern), conf.value)
+    val files = FileListing.expand(Seq(pattern), conf.value)
       .filter(_.toLowerCase.endsWith(".zip"))
-    // same int-range clamp as TextArchiveTable: the walker materializes
-    // payloads as byte arrays, so the cap must stay below Int.MaxValue
-    val cappedPayload = maxPayload.min(Int.MaxValue.toLong - 8)
+    val cappedPayload = FileListing.clampPayload(maxPayload)
     import spark.implicits._
     val parts = math.max(1, math.min(files.size, 64))
     spark.createDataset(files).repartition(parts) // bounded: the file listing

@@ -41,7 +41,7 @@ class AvroDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graftavro"
   override def supportsExternalMetadata(): Boolean = false
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = ElbDataSource.resolvePaths(
+    val paths = FileListing.resolvePaths(
       options.asCaseSensitiveMap().asInstanceOf[java.util.Map[String, String]])
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val files = AvroDataSource.listAvro(paths, conf)
@@ -54,13 +54,13 @@ class AvroDataSource extends TableProvider with DataSourceRegister {
   }
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new AvroTable(ElbDataSource.resolvePaths(properties), schema)
+    new AvroTable(FileListing.resolvePaths(properties), schema)
 }
 
 object AvroDataSource {
   private[sources] def listAvro(paths: Seq[String],
       conf: org.apache.hadoop.conf.Configuration): Seq[String] =
-    ElbDataSource.expand(paths, conf).filter(_.endsWith(".avro"))
+    FileListing.expand(paths, conf).filter(_.endsWith(".avro"))
 
   /** Avro → Spark type mapping over the supported primitive lattice;
     * `["null", T]` unions map to nullable T. Anything else is a loud
@@ -117,8 +117,6 @@ class AvroScanBuilder(paths: Seq[String], full: StructType,
   override def build(): Scan = new AvroScan(paths, required, conf)
 }
 
-case class AvroFilePartition(path: String) extends InputPartition
-
 class AvroScan(paths: Seq[String], required: StructType,
     conf: SerializableHadoopConf) extends Scan with Batch {
   private lazy val files = AvroDataSource.listAvro(paths, conf.value)
@@ -127,7 +125,7 @@ class AvroScan(paths: Seq[String], required: StructType,
   override def description(): String =
     s"graftavro scan: ${files.size} files, ReadSchema: ${required.fieldNames.mkString(",")}"
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(AvroFilePartition(_): InputPartition).toArray
+    FileListing.partitions(files)
   override def createReaderFactory(): PartitionReaderFactory =
     new AvroReaderFactory(required, conf)
 }
@@ -136,7 +134,7 @@ class AvroReaderFactory(required: StructType, conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new AvroPartitionReader(
-      partition.asInstanceOf[AvroFilePartition].path, required, conf)
+      partition.asInstanceOf[ListedFile].path, required, conf)
 }
 
 /** Streams one container file; converts ONLY the required fields per

@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, ObjectInputStream, ObjectOutputStream}
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
@@ -15,7 +13,7 @@ import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -51,65 +49,13 @@ class ElbDataSource extends TableProvider with DataSourceRegister {
     ElbDataSource.fullSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new ElbTable(ElbDataSource.resolvePaths(properties))
+    new ElbTable(FileListing.resolvePaths(properties))
 }
 
 object ElbDataSource {
   val fileColumn = "log_source_file"
   val fullSchema: StructType =
     StructType(ElbSchema.raw.fields :+ StructField(fileColumn, StringType, nullable = false))
-
-  /** Paths from DSv2 options: `.load(p)` → "path"; `.load(ps: _*)` →
-    * "paths" as a JSON string array, decoded as Spark's file sources do.
-    */
-  private[sources] def resolvePaths(props: java.util.Map[String, String]): Seq[String] = {
-    val multi = Option(props.get("paths")).toSeq.flatMap { js =>
-      new ObjectMapper().readValue(js, classOf[Array[String]]).toSeq
-    }
-    val single = Option(props.get("path")).toSeq
-    val all = multi ++ single
-    require(all.nonEmpty, "elb source requires a path")
-    all
-  }
-
-  /** Driver-side glob expansion, mirroring Spark's file-index rules
-    * (skip hidden `_`/`.` files).
-    */
-  private[sources] def expand(paths: Seq[String], conf: Configuration): Seq[String] = {
-    paths.flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val matches: Seq[FileStatus] =
-        Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-      matches.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-        else Seq(st)
-      }
-    }.filter { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }.map { st =>
-      // render like `input_file_name()` does (empty authority kept:
-      // file:///x, not Path.toUri's file:/x) so the file column is
-      // byte-identical to the text-source path
-      val u = st.getPath.toUri
-      new java.net.URI(u.getScheme, Option(u.getAuthority).getOrElse(""),
-        u.getPath, null, null).toString
-    }.sorted
-  }
-}
-
-/** Minimal serializable Hadoop-conf carrier (the stock spark one is
-  * `private[spark]`): Configuration itself knows how to write/read its
-  * fields.
-  */
-class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
 }
 
 class ElbTable(paths: Seq[String]) extends Table with SupportsRead {
@@ -143,59 +89,26 @@ class ElbScanBuilder(paths: Seq[String], conf: SerializableHadoopConf)
   override def build(): Scan = new ElbScan(paths, required, pushed, conf)
 }
 
-case class ElbFilePartition(path: String) extends InputPartition
-
 class ElbScan(paths: Seq[String], required: StructType, pushed: Array[Filter],
     conf: SerializableHadoopConf) extends Scan with Batch {
-  private lazy val files = ElbDataSource.expand(paths, conf.value)
+  private lazy val files = FileListing.expand(paths, conf.value)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"elb scan: ${files.size} files, ${required.fieldNames.mkString(",")}" +
       (if (pushed.isEmpty) "" else s", PushedFilters: ${pushed.mkString(", ")}")
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(ElbFilePartition(_): InputPartition).toArray
+    FileListing.partitions(files)
   override def createReaderFactory(): PartitionReaderFactory =
     new ElbReaderFactory(required, pushed, conf)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ElbMicroBatchStream(paths, required, pushed, conf)
-}
-
-/** File-count offsets over the SORTED listing: batch N..M reads files
-  * N until M of the lexicographic order. Exactly-once holds for
-  * append-only directories whose new files sort after processed ones —
-  * true for ALB's timestamped log object names, and the reason this
-  * stays a dozen lines where the general text file source carries a
-  * seen-files map. (A violated assumption shows up loudly: the drain
-  * re-reads or skips whole files, which ElbSourceSpec's incremental
-  * test would catch.)
-  */
-case class ElbFileOffset(n: Int) extends Offset {
-  override def json(): String = n.toString
-}
-
-class ElbMicroBatchStream(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], conf: SerializableHadoopConf) extends MicroBatchStream {
-  private def listing(): Seq[String] = ElbDataSource.expand(paths, conf.value)
-  override def initialOffset(): Offset = ElbFileOffset(0)
-  override def latestOffset(): Offset = ElbFileOffset(listing().size)
-  override def deserializeOffset(json: String): Offset =
-    ElbFileOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ElbFileOffset].n
-    val e = end.asInstanceOf[ElbFileOffset].n
-    listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ElbReaderFactory(required, pushed, conf)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+    new FileListingStream(paths, conf, createReaderFactory())
 }
 
 class ElbReaderFactory(required: StructType, pushed: Array[Filter],
     conf: SerializableHadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ElbPartitionReader(partition.asInstanceOf[ElbFilePartition].path,
+    new ElbPartitionReader(partition.asInstanceOf[ListedFile].path,
       required, pushed, conf)
 }
 

@@ -11,9 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNotNull, StringContains, StringStartsWith}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,14 +77,12 @@ class TextArchiveDataSource extends TableProvider with DataSourceRegister {
     TextArchiveDataSource.fullSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new TextArchiveTable(ElbDataSource.resolvePaths(properties),
-      Option(properties.get("maxpayload")).map(_.toLong)
-        .getOrElse(TextArchiveDataSource.defaultMaxPayload))
+    new TextArchiveTable(FileListing.resolvePaths(properties),
+      FileListing.maxPayload(properties, FileListing.defaultMaxPayload))
 }
 
 object TextArchiveDataSource {
   val fileColumn = "archive_source_file"
-  val defaultMaxPayload: Long = 64L * 1024 * 1024
   /** Compressed payload bytes per CD-planned zip partition — the
     * `maxPartitionBytes` analog for the container leg.
     */
@@ -117,21 +114,8 @@ object TextArchiveDataSource {
     * slot, so its local header is never even seeked to).
     */
   private[sources] def compilePredicates(
-      pushed: Array[Filter]): ArchiveMember => Boolean = {
-    val preds: Array[ArchiveMember => Boolean] = pushed.map {
-      case EqualTo(a, v: String) => (m: ArchiveMember) => field(m, a) == v
-      case In(a, vs) =>
-        val set = vs.map(_.asInstanceOf[String]).toSet
-        (m: ArchiveMember) => { val f = field(m, a); f != null && set.contains(f) }
-      case IsNotNull(a) => (m: ArchiveMember) => field(m, a) != null
-      case StringStartsWith(a, p) => (m: ArchiveMember) =>
-        { val f = field(m, a); f != null && f.startsWith(p) }
-      case StringContains(a, s) => (m: ArchiveMember) =>
-        { val f = field(m, a); f != null && f.contains(s) }
-      case f => throw new IllegalStateException(s"unpushable filter $f")
-    }
-    m => preds.forall(_(m))
-  }
+      pushed: Array[Filter]): ArchiveMember => Boolean =
+    FileListing.headerPredicate(pushed, field)
 
   /** Lowercased extension of the member BASENAME (null when none). */
   def extOf(path: String): String = {
@@ -151,12 +135,6 @@ class TextArchiveTable(paths: Seq[String], maxPayload: Long)
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    // clamp: payloads materialize as JVM byte arrays, so a cap above
-    // Int.MaxValue would let `size.toInt` wrap negative in the tar walker
-    // and `maxPayload + 1` overflow in the zip walker — both uncaught.
-    // Anything ≥ ~2 GiB per member is beyond this source's design anyway.
-    val mp = Option(options.get("maxpayload")).map(_.toLong).getOrElse(maxPayload)
-      .min(Int.MaxValue.toLong - 8)
     // `zipcd=false` forces the forward stream walk for zips (the
     // pre-round-15 behavior — kept for parity pinning and for archives
     // whose directories are known-hostile); `zipsplitbytes` targets the
@@ -164,8 +142,8 @@ class TextArchiveTable(paths: Seq[String], maxPayload: Long)
     val zipCd = Option(options.get("zipcd")).forall(_.toBoolean)
     val zipSplitBytes = Option(options.get("zipsplitbytes")).map(_.toLong)
       .getOrElse(TextArchiveDataSource.defaultZipSplitBytes).max(1L)
-    new TextArchiveScanBuilder(paths, mp, zipCd, zipSplitBytes,
-      new SerializableHadoopConf(conf))
+    new TextArchiveScanBuilder(paths, FileListing.maxPayload(options, maxPayload),
+      zipCd, zipSplitBytes, new SerializableHadoopConf(conf))
   }
 }
 
@@ -177,17 +155,10 @@ class TextArchiveScanBuilder(paths: Seq[String], maxPayload: Long,
   private var pushed: Array[Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val ok = TextArchiveDataSource.filterable
-    val (acc, rest) = filters.partition {
-      case EqualTo(a, _: String) => ok.contains(a)
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) => ok.contains(a)
-      case IsNotNull(a) => ok.contains(a)
-      case StringStartsWith(a, _) => ok.contains(a)
-      case StringContains(a, _) => ok.contains(a)
-      case _ => false
-    }
+    val (acc, postScan) =
+      FileListing.pushHeaderFilters(filters, TextArchiveDataSource.filterable)
     pushed = acc
-    rest ++ acc
+    postScan
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan =
@@ -198,7 +169,7 @@ class TextArchiveScanBuilder(paths: Seq[String], maxPayload: Long,
 class TextArchiveScan(paths: Seq[String], required: StructType,
     pushed: Array[Filter], maxPayload: Long, zipCd: Boolean,
     zipSplitBytes: Long, conf: SerializableHadoopConf) extends Scan with Batch {
-  private lazy val files = ElbDataSource.expand(paths, conf.value)
+  private lazy val files = FileListing.expand(paths, conf.value)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -226,7 +197,7 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val passes = TextArchiveDataSource.compilePredicates(pushed)
     def planFile(f: String): Seq[InputPartition] =
-      if (!zipCd || !f.toLowerCase.endsWith(".zip")) Seq(ElbFilePartition(f))
+      if (!zipCd || !f.toLowerCase.endsWith(".zip")) Seq(ListedFile(f))
       else {
         val hp = new org.apache.hadoop.fs.Path(f)
         val fs = hp.getFileSystem(conf.value)
@@ -255,7 +226,7 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
           catch { case scala.util.control.NonFatal(e) =>
             Left(s"central directory unreadable: ${e.getMessage}") }
         parsed match {
-          case Left(_) => Seq(ElbFilePartition(f)) // forward-walk fallback
+          case Left(_) => Seq(ListedFile(f)) // forward-walk fallback
           case Right(_) =>
             flush()
             groups.toSeq
@@ -276,7 +247,7 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
   override def createReaderFactory(): PartitionReaderFactory =
     new TextArchiveReaderFactory(required.fieldNames, pushed, maxPayload, conf)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new TextArchiveMicroBatchStream(paths, required, pushed, maxPayload, conf)
+    new FileListingStream(paths, conf, createReaderFactory())
 }
 
 /** CD-planned member range of one zip: the local-header offsets this
@@ -286,28 +257,6 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
 case class ZipMemberRangePartition(path: String, locOffsets: Array[Long])
     extends InputPartition
 
-/** File-count offsets over the sorted listing — the [[ElbMicroBatchStream]]
-  * recipe; corpus drop folders are append-only with versioned names.
-  */
-class TextArchiveMicroBatchStream(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], maxPayload: Long,
-    conf: SerializableHadoopConf) extends MicroBatchStream {
-  private def listing(): Seq[String] = ElbDataSource.expand(paths, conf.value)
-  override def initialOffset(): Offset = ElbFileOffset(0)
-  override def latestOffset(): Offset = ElbFileOffset(listing().size)
-  override def deserializeOffset(json: String): Offset =
-    ElbFileOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ElbFileOffset].n
-    val e = end.asInstanceOf[ElbFileOffset].n
-    listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TextArchiveReaderFactory(required.fieldNames, pushed, maxPayload, conf)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
 class TextArchiveReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
     maxPayload: Long, conf: SerializableHadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -315,7 +264,7 @@ class TextArchiveReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
       case ZipMemberRangePartition(path, offsets) =>
         new ZipMembersPartitionReader(path, offsets, fieldNames, pushed,
           maxPayload, conf)
-      case p: ElbFilePartition =>
+      case p: ListedFile =>
         new TextArchivePartitionReader(p.path, fieldNames, pushed,
           maxPayload, conf)
       case p => throw new IllegalStateException(s"unexpected partition $p")

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNotNull, StringContains, StringStartsWith}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,14 +64,12 @@ class WarcDataSource extends TableProvider with DataSourceRegister {
     WarcDataSource.fullSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new WarcTable(ElbDataSource.resolvePaths(properties),
-      Option(properties.get("maxpayload")).map(_.toLong)
-        .getOrElse(WarcDataSource.defaultMaxPayload))
+    new WarcTable(FileListing.resolvePaths(properties),
+      FileListing.maxPayload(properties, FileListing.defaultMaxPayload))
 }
 
 object WarcDataSource {
   val fileColumn = "warc_source_file"
-  val defaultMaxPayload: Long = 64L * 1024 * 1024
 
   val fullSchema: StructType = StructType(Seq(
     StructField("warc_type", StringType),
@@ -100,8 +98,8 @@ class WarcTable(paths: Seq[String], maxPayload: Long)
     val conf = SparkSession.active.sessionState.newHadoopConf()
     // read options resolve here (case-insensitive); the table-level value
     // is the fallback for paths where options don't reach getTable
-    val mp = Option(options.get("maxpayload")).map(_.toLong).getOrElse(maxPayload)
-    new WarcScanBuilder(paths, mp, new SerializableHadoopConf(conf))
+    new WarcScanBuilder(paths, FileListing.maxPayload(options, maxPayload),
+      new SerializableHadoopConf(conf))
   }
 }
 
@@ -113,22 +111,11 @@ class WarcScanBuilder(paths: Seq[String], maxPayload: Long,
   private var pushed: Array[Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
-  /** Same V2 contract as the ELB source: accepted shapes are also
-    * returned for Spark's post-scan re-check; the win is payloads never
-    * read for records a header predicate rejects.
-    */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val ok = WarcDataSource.filterable
-    val (acc, rest) = filters.partition {
-      case EqualTo(a, _: String) => ok.contains(a)
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) => ok.contains(a)
-      case IsNotNull(a) => ok.contains(a)
-      case StringStartsWith(a, _) => ok.contains(a)
-      case StringContains(a, _) => ok.contains(a)
-      case _ => false
-    }
+    val (acc, postScan) =
+      FileListing.pushHeaderFilters(filters, WarcDataSource.filterable)
     pushed = acc
-    rest ++ acc
+    postScan
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan = new WarcScan(paths, required, pushed, maxPayload, conf)
@@ -136,47 +123,24 @@ class WarcScanBuilder(paths: Seq[String], maxPayload: Long,
 
 class WarcScan(paths: Seq[String], required: StructType, pushed: Array[Filter],
     maxPayload: Long, conf: SerializableHadoopConf) extends Scan with Batch {
-  private lazy val files = ElbDataSource.expand(paths, conf.value)
+  private lazy val files = FileListing.expand(paths, conf.value)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"warc scan: ${files.size} files, ${required.fieldNames.mkString(",")}" +
       (if (pushed.isEmpty) "" else s", PushedFilters: ${pushed.mkString(", ")}")
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(ElbFilePartition(_): InputPartition).toArray
+    FileListing.partitions(files)
   override def createReaderFactory(): PartitionReaderFactory =
     new WarcReaderFactory(required.fieldNames, pushed, maxPayload, conf)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WarcMicroBatchStream(paths, required, pushed, maxPayload, conf)
-}
-
-/** File-count offsets over the sorted listing — the [[ElbMicroBatchStream]]
-  * recipe; crawl drop folders are append-only with timestamped names, the
-  * same assumption ALB log folders satisfy.
-  */
-class WarcMicroBatchStream(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], maxPayload: Long,
-    conf: SerializableHadoopConf) extends MicroBatchStream {
-  private def listing(): Seq[String] = ElbDataSource.expand(paths, conf.value)
-  override def initialOffset(): Offset = ElbFileOffset(0)
-  override def latestOffset(): Offset = ElbFileOffset(listing().size)
-  override def deserializeOffset(json: String): Offset =
-    ElbFileOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ElbFileOffset].n
-    val e = end.asInstanceOf[ElbFileOffset].n
-    listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required.fieldNames, pushed, maxPayload, conf)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+    new FileListingStream(paths, conf, createReaderFactory())
 }
 
 class WarcReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
     maxPayload: Long, conf: SerializableHadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(partition.asInstanceOf[ElbFilePartition].path,
+    new WarcPartitionReader(partition.asInstanceOf[ListedFile].path,
       fieldNames, pushed, maxPayload, conf)
 }
 
@@ -357,7 +321,7 @@ class WarcPartitionReader(pathStr: String, fieldNames: Array[String],
   private val pathUtf8 = UTF8String.fromString(pathStr)
   private val wantPayload = fieldNames.contains("payload")
 
-  private def field(r: WarcRecord, name: String): Any = name match {
+  private def field(r: WarcRecord, name: String): String = name match {
     case "warc_type" => r.warcType
     case "record_id" => r.recordId
     case "target_uri" => r.targetUri
@@ -365,19 +329,7 @@ class WarcPartitionReader(pathStr: String, fieldNames: Array[String],
     case _ => null
   }
 
-  private val preds: Array[WarcRecord => Boolean] = pushed.map {
-    case EqualTo(a, v: String) => (r: WarcRecord) => field(r, a) == v
-    case In(a, vs) =>
-      val set = vs.map(_.asInstanceOf[String]).toSet
-      (r: WarcRecord) => { val f = field(r, a); f != null && set.contains(f.asInstanceOf[String]) }
-    case IsNotNull(a) => (r: WarcRecord) => field(r, a) != null
-    case StringStartsWith(a, p) => (r: WarcRecord) =>
-      { val f = field(r, a); f != null && f.asInstanceOf[String].startsWith(p) }
-    case StringContains(a, s) => (r: WarcRecord) =>
-      { val f = field(r, a); f != null && f.asInstanceOf[String].contains(s) }
-    case f => throw new IllegalStateException(s"unpushable filter $f")
-  }
-  private def passes(r: WarcRecord): Boolean = preds.forall(_(r))
+  private val passes = FileListing.headerPredicate(pushed, field)
 
   private lazy val iter: WarcRecordIterator = {
     val hp = new org.apache.hadoop.fs.Path(pathStr)

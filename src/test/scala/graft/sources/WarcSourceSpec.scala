@@ -160,6 +160,22 @@ class WarcSourceSpec extends SparkSpec {
     assert(rows.count(_.getAs[Boolean]("ok")) == 2)
   }
 
+  test("maxPayload above the array limit is clamped: a >4 GiB declared length quarantines") {
+    // 4294967306 truncates to 10 as an Int; unclamped, a 5 GiB cap let the
+    // record through and the payload read looped on a zero-byte read
+    val huge = "WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Record-ID: <urn:uuid:huge>\r\n" +
+      "Content-Length: 4294967306\r\n\r\n0123456789abcdef\r\n\r\n"
+    val path = writeFile("huge.warc",
+      (goodPair + huge).getBytes(StandardCharsets.UTF_8))
+    val rows = spark.read.format("warc").option("maxpayload", "5368709120")
+      .load(path).collect()
+    assert(rows.count(_.getAs[Boolean]("ok")) == 2)
+    val bad = rows.filter(!_.getAs[Boolean]("ok"))
+    assert(bad.map(_.getAs[String]("error")).toSeq ==
+      Seq("payload exceeds maxPayload cap: 4294967306"))
+    assert(bad.head.getAs[String]("record_id") == "<urn:uuid:huge>")
+  }
+
   test("type pushdown skips payloads; pruning drops payload from ReadSchema") {
     val n = 200
     val glob = SyntheticWarc.dataset(n)

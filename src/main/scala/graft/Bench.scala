@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
   *
@@ -46,38 +44,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     // shuffle partitions default to the thread count (the committed-
     // bench shape), but sf10-class scale probes need them decoupled:
     // 60M-row shuffles in 4 partitions spill and GC-thrash regardless
     // of how good the plan is (round-13 sweep finding)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    // AQE coalescing floor probe knob (round 15). A global 16k floor was
-    // MEASURED AND REJECTED: it un-serializes compute-dense small stages
-    // (q260's 4M-md5 lattice ran as ONE task behind a ~1 MiB distinct;
-    // 3.87 → 0.35 s with the floor), but it taxes every small exchange
-    // of the many-exchange iterative family with tiny tasks — q161's CC
-    // loop measured 12.0 s @16k vs 5.3 s @1m on the same quiet host,
-    // with ~15 more queries +0.3–1.1 s each. The compute-dense ops now
-    // carry explicit scale-free spreads instead (reshardMovement,
-    // theilSen, fellegiSunter pair joins, hllSlidingEstimate, the
-    // percentile histograms — each spreads a bounded frame by the
-    // session's shuffle parallelism, the q208 discipline), so the
-    // session keeps Spark's default floor; the env knob stays for
-    // probe parity with the recorded matrix.
-    val minCoalesced = sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "1m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        minCoalesced)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(shufflePartitions =
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt))
     // WindowExec's "No Partition Defined" WARN fires 10+/sec across the
     // suite's audited-bounded unpartitioned windows (distinct-value /
     // bin-sized frames per scaladoc) and flooded the one log the driver
@@ -175,28 +148,10 @@ object Bench {
       else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
     }
 
-    // local-iteration filter (comma-separated substrings, any-match);
-    // the driver sets nothing, so its runs always cover every query
+    // local-iteration filter (`SparkEntry.filterTerms` syntax); unset,
+    // every query runs
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    // bench operability tier (round 13): the full suite is ~35 min and
-    // grows ~15%/round, and sessions have been lost to partial-run
-    // hygiene. `SPARK_GRAFT_BENCH_TIER=smoke` runs the fixed-cost
-    // control, the flagship parse/agg pipelines, and the newest round's
-    // queries — the cheap inner-loop signal. The committed bench.json
-    // artifact must ALWAYS be a full-tier run (the driver sets no tier,
-    // so its runs are full by construction).
-    val tier = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIER", "full")
-    require(tier == "full" || tier == "smoke", s"unknown bench tier $tier")
-    def qNum(n: String): Int = "^q(\\d+)".r.findFirstMatchIn(n)
-      .map(_.group(1).toInt).getOrElse(-1)
-    val smokeSet: Set[String] = Set("q000_scheduler_control", "q03_revenue_by_nation",
-      "q01_hourly_agg", "q18_elb_pipeline", "q55_elb_staged",
-      "q97_elb_v2", "q163_bootstrap_ci") ++
-      SparkEntry.queries.keys.filter(qNum(_) >= 394) // newest round block
-    def selected(n: String): Boolean =
-      only.forall(_.exists(n.contains)) &&
-        (tier == "full" || smokeSet.contains(n))
+    val names = SparkEntry.selectQueries(only)
 
     // ---- incremental artifact plumbing (round 15) ----
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
@@ -272,12 +227,11 @@ object Bench {
     val warmups = Seq("q03_revenue_by_nation", "q01_hourly_agg",
       "q18_elb_pipeline", "q55_elb_staged", "q359_warc_wet",
       "q394_textarchive_scan", "q363_substring_dedup")
-    warmups.filter(selected).foreach(once)
-    only.foreach(_.filterNot(f => warmups.exists(_.contains(f))).foreach { f =>
-      SparkEntry.queries.keys.toSeq.sorted.find(_.contains(f)).foreach(once)
-    })
+    warmups.filter(names.contains).foreach(once)
+    for (f <- only.toSeq.flatMap(SparkEntry.filterTerms)
+         if !warmups.exists(_.contains(f)))
+      names.find(_.contains(f)).foreach(once)
 
-    val names = SparkEntry.queries.keys.toSeq.sorted.filter(selected)
     sampleLoad("start")
     names.zipWithIndex.foreach { case (n, i) =>
       results += n -> exec(n)

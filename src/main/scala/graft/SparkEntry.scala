@@ -23,6 +23,19 @@ object SparkEntry {
       ElbQueries.all ++ ExtraQueries.all ++ WarcQueries.all ++
       SubstringQueries.all ++ Round14Queries.all ++ TextArchiveQueries.all
 
+  /** Terms of a query-name filter: comma-separated, trimmed, empty ones
+    * dropped. A name is selected when it contains any term. Bench's
+    * `SPARK_GRAFT_BENCH_ONLY`, Verify's third argument and JobAudit's
+    * second argument all take this syntax. */
+  def filterTerms(filter: String): Seq[String] =
+    filter.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** Sorted names of the queries that `filter` selects (all when `None`). */
+  def selectQueries(filter: Option[String]): Seq[String] = {
+    val terms = filter.map(filterTerms)
+    queries.keys.toSeq.sorted.filter(n => terms.forall(_.exists(n.contains)))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,39 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated any-match substring filter over
-    // query names (local iteration only — the driver always passes
-    // exactly two; same syntax as Bench's SPARK_GRAFT_BENCH_ONLY)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) =>
-        (s, o, Some(f.split(",").toSeq.map(_.trim).filter(_.nonEmpty)))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // probe knob only — default floor; see Bench scaladoc (round 15)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional 3rd arg: a `SparkEntry.filterTerms` query-name filter
+    // (local iteration only; a full correctness dump passes two)
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [<query-filter>]")
+    val Array(sfDir, outDir) = args.take(2)
+    val spark = GraftSession()
     // fail fast (named error, schema printout) on a driver-side testdata
     // regeneration that breaks a loader assumption — see Tables scaladoc
     graft.queries.Tables.checkContract(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    SparkEntry.selectQueries(args.lift(2)).foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

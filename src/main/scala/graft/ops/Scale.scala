@@ -3,13 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale mechanics: skew-salted joins and bucketed (co-located) tables.
+/** Scale mechanics: skew-salted joins, z-order clustering, and the skew,
+  * layout and join-strategy advisors.
   *
   * AQE's skew-join handling covers most hot-key cases at runtime; explicit
   * salting remains the tool when a single key dominates so heavily that
   * even split partitions of it won't fit (e.g. one client IP emitting a
-  * double-digit percent of 100 TB of logs), or when the skewed operation
-  * is an aggregation rather than a join.
+  * double-digit percent of 100 TB of logs).
   */
 object Scale {
 
@@ -32,19 +32,6 @@ object Scale {
         joinType)
       .drop(replicated(key)).drop(salted("_salt")).drop(replicated("_salt"))
   }
-
-  /** Skew-tolerant aggregation: two-phase (salted partial → final).
-    * `aggs` must be decomposable (sum/count/min/max-style). Spark already
-    * does map-side partial aggregation; this adds a *shuffle-level* split
-    * for keys whose post-combine partial state is still too hot.
-    */
-  def saltedSumCount(df: DataFrame, key: String, valueCol: String,
-      numSalts: Int, saltSource: Column): DataFrame =
-    df.withColumn("_salt", pmod(abs(hash(saltSource)), lit(numSalts)))
-      .groupBy(col(key), col("_salt"))
-      .agg(sum(col(valueCol)).as("_s"), count(col(valueCol)).as("_c"))
-      .groupBy(col(key))
-      .agg(sum(col("_s")).as(s"sum_$valueCol"), sum(col("_c")).as(s"count_$valueCol"))
 
   /** Z-order (Morton) value of two non-negative bucketed dimensions:
     * bit i of `x` lands at output bit 2i, bit i of `y` at 2i+1 — the
@@ -77,17 +64,6 @@ object Scale {
     df.withColumn("_z", zOrderValue(x, y, bits))
       .repartitionByRange(numPartitions, col("_z"))
       .drop("_z")
-
-  /** Write a table bucketed (+ sorted) by its join key. Two tables
-    * bucketed the same way join with ZERO exchanges — the 100 TB answer
-    * to repeated fact-to-fact joins on the same key.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Shuffle-skew advisor: simulate hash-partitioning the frame on
     * `key` into `parts` partitions (md5 bucket — engine-portable, so

@@ -918,8 +918,6 @@ object Similarity {
 
   /** Refined centroids persisted by [[rebalanceIvfIndex]]. */
   def centroidsPath(path: String): String = s"$path.centroids"
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(centroidsPath(path))
 
   /** id→centroid sidecar: one (id, centroid_id) row per indexed vector.
     * [[appendToIvfIndex]] consults it to find a batch's previous homes —

@@ -55,24 +55,4 @@ object StreamingDedup {
       dedupFps(readDocumentsStream(spark, dir)), tableName,
       OutputMode.Append(),
       noDataBatch = false) // admitted rows emit as they pass, none on close
-
-  /** Continuous-run variant with BOUNDED state:
-    * `dropDuplicatesWithinWatermark` keeps a fingerprint in the state
-    * store only until the watermark passes its event time + delay, so
-    * the seen-set stops growing with corpus size — the admission
-    * contract weakens from "never seen" to "not seen within the
-    * horizon" (re-ingest of old content is re-admitted once its
-    * original fingerprint has aged out; full-history admission is the
-    * batch q66/q76 path). This is the production shape for an unbounded
-    * stream, where [[dedupFps]]'s unbounded seen-set would eventually
-    * exhaust the state store.
-    *
-    * `docs` must carry an `event_ts` timestamp column (ingest time or
-    * document time); the fingerprint + its event time are emitted.
-    */
-  def dedupFpsWithinWatermark(docs: DataFrame,
-      delay: String = "1 hour"): DataFrame =
-    docs.select(TextOps.fingerprint(col("text")).as("fp"), col("event_ts"))
-      .withWatermark("event_ts", delay)
-      .dropDuplicatesWithinWatermark("fp")
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.elb.ElbParser
 
 /** Minimal CLI over the parse stage: `runMain graft.tools.ElbParseCli
@@ -10,16 +11,13 @@ import graft.elb.ElbParser
   */
 object ElbParseCli {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession()
+    try run(spark, args.toSeq) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     require(args.nonEmpty, "usage: ElbParseCli <path-or-glob> [...]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("elb-parse-cli")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = ElbParser.parse(spark, args.toSeq).cache()
+    val df = ElbParser.parse(spark, args).cache()
     val total = df.count()
     println(s"parsed_rows=$total")
     val derived = df.select("time", "client_ip", "http_method", "hostname", "port",
@@ -28,6 +26,6 @@ object ElbParseCli {
     derived.show(20, truncate = false)
     println("sample_json:")
     df.limit(3).toJSON.collect().foreach(println)
-    spark.stop()
+    df.unpersist()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -10,26 +9,14 @@ import java.util.concurrent.atomic.AtomicLong
   * latency-noise-sensitive under harness load (each job pays scheduler
   * round-trip latency that dwarfs its compute at small SF) — this tool
   * localizes them. Usage:
-  *   runMain graft.tools.JobAudit <sfDir> <nameSubstr>[,<nameSubstr>...]
+  *   runMain graft.tools.JobAudit <sfDir> <query-filter>
+  * (`SparkEntry.filterTerms` syntax: comma-separated name substrings)
   */
 object JobAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val only = args(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-    // thread count and shuffle partitions as Bench/Verify take them
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's coalescing floor so audits see the bench layout
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2, "usage: JobAudit <sfDir> <query-filter>")
+    val Array(sfDir, filter) = args
+    val spark = graft.GraftSession() // the session Bench and Verify run on
     val jobs = new AtomicLong(0)
     val stages = new AtomicLong(0)
     val tasks = new AtomicLong(0)
@@ -40,8 +27,7 @@ object JobAudit {
         tasks.addAndGet(s.stageInfo.numTasks.toLong)
       }
     })
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.exists(n.contains))
+    val names = graft.SparkEntry.selectQueries(Some(filter))
     names.foreach { n => // warm both the reader caches and codegen first
       graft.SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

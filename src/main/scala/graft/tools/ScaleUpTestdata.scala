@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale a driver-provided testdata directory up by an integer factor —
@@ -24,17 +24,11 @@ object ScaleUpTestdata {
   private val Span = 1000000000L
 
   def main(args: Array[String]): Unit = {
+    require(args.length == 3, "usage: ScaleUpTestdata <srcDir> <dstDir> <factor>")
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val shifted: Map[String, Seq[String]] = Map(
       "region" -> Nil, "nation" -> Nil,

@@ -7,20 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a forked JVM per `Test / fork := true`).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // 4 threads whatever SPARK_GRAFT_CPUS says: the suite's session must
+  // not change with the host
+  lazy val spark: SparkSession = GraftSession(threads = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

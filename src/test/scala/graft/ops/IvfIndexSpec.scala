@@ -312,7 +312,7 @@ class IvfIndexSpec extends SparkSpec {
       s"expected de-skew, got maxBefore=$maxB maxAfter=$maxA moved=$moved")
     // refined centroids persisted and the index still serves exactly:
     // a cluster-1 query probed with 1 bucket finds cluster-1 neighbors
-    val refined = Similarity.loadCentroids(spark, path)
+    val refined = spark.read.parquet(Similarity.centroidsPath(path))
     val q = Seq(Tuple1(vec(1, 3).map(_.toDouble))).toDF("qvec")
     val hits = Similarity.ivfTopKIndexed(path, refined, q, k = 5, nProbe = 1)
       .collect().map(_.getLong(0))

@@ -21,16 +21,6 @@ class ScaleSpec extends SparkSpec {
     assert(salted.except(plain).count() == 0)
   }
 
-  test("salted two-phase aggregation equals direct groupBy") {
-    val df = (1 to 10000).map(i => (if (i % 100 == 0) i.toLong else 1L, i.toDouble))
-      .toDF("k", "v")
-    val direct = df.groupBy("k")
-      .agg(sum("v").as("sum_v"), count("v").as("count_v"))
-    val salted = Scale.saltedSumCount(df, "k", "v", 16, col("v"))
-    assert(direct.count() == salted.count())
-    assert(direct.except(salted).count() == 0)
-  }
-
   test("approximate aggregates stay inside their error envelopes") {
     val ev = Tables.events(spark, sf("sf0.01"))
     val row = ev.agg(
@@ -47,24 +37,6 @@ class ScaleSpec extends SparkSpec {
     // so the approximate median must land within the central value band
     assert(math.abs(am - em) <= 0.05 * math.max(math.abs(em), 1.0),
       s"approx_percentile drifted: $am vs $em")
-  }
-
-  test("bucketed tables join with zero exchanges") {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    Scale.writeBucketed(Tables.orders(spark, sf()).select("o_orderkey", "o_totalprice"),
-      "orders_b", "o_orderkey", 8)
-    Scale.writeBucketed(Tables.lineitem(spark, sf()).select("l_orderkey", "l_quantity"),
-      "lineitem_b", "l_orderkey", 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("lineitem_b").join(spark.table("orders_b"),
-        col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-      assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 
   test("zOrderValue: hand-computed Morton interleave") {

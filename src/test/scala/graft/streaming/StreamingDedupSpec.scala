@@ -38,43 +38,6 @@ class StreamingDedupSpec extends SparkSpec {
     assert(fps.toSet == batchFps)
   }
 
-  test("watermark variant dedups within the horizon and bounds state") {
-    val dir = java.nio.file.Files.createTempDirectory("sdedup-wm").toString
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def at(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
-    // batch 1: duplicate at t0+1min suppressed within the horizon.
-    // batch 2: an unrelated doc a day later ADVANCES the watermark at
-    // batch end (eviction happens then, not mid-batch), aging alpha out.
-    // batch 3: alpha re-ingested after eviction → re-admitted.
-    Seq((1L, "alpha beta gamma", at(0)), (2L, "alpha beta gamma", at(1)))
-      .toDF("doc_id", "text", "event_ts").coalesce(1).write.parquet(s"$dir/f1")
-    Seq((3L, "delta epsilon zeta", at(60 * 24)))
-      .toDF("doc_id", "text", "event_ts").coalesce(1).write.parquet(s"$dir/f2")
-    Seq((4L, "eta theta iota", at(60 * 24 + 1)))
-      .toDF("doc_id", "text", "event_ts").coalesce(1).write.parquet(s"$dir/f3")
-    Seq((5L, "alpha beta gamma", at(60 * 24 + 2)))
-      .toDF("doc_id", "text", "event_ts").coalesce(1).write.parquet(s"$dir/f4")
-    val ckpt = java.nio.file.Files.createTempDirectory("sdedup-wm-ckpt").toString
-    val stream = spark.readStream
-      .schema("doc_id long, text string, event_ts timestamp")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/f*/part-*.parquet")
-    val q = StreamingDedup.dedupFpsWithinWatermark(stream, "1 hour")
-      .writeStream.format("memory").queryName("sdedup_wm")
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val rows = spark.table("sdedup_wm").collect()
-    spark.catalog.dropTempView("sdedup_wm")
-    // alpha@t0, delta@day, eta@day+1min, alpha-re-admitted@day+2min;
-    // the t0+1min duplicate stays suppressed. (Eviction uses the
-    // watermark advanced by the PREVIOUS batch and runs at batch end,
-    // hence the spacer batch between the aging event and the re-ingest.)
-    assert(rows.length == 4, s"got ${rows.mkString(";")}")
-  }
-
   test("near-dup admission: admitted docs reject later batches, rejected don't") {
     val base = java.nio.file.Files.createTempDirectory("sneardup").toString
     val accepted = s"$base/accepted.parquet"

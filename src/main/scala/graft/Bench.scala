@@ -229,8 +229,8 @@ object Bench {
       "q394_textarchive_scan", "q363_substring_dedup")
     warmups.filter(names.contains).foreach(once)
     for (f <- only.toSeq.flatMap(SparkEntry.filterTerms)
-         if !warmups.exists(_.contains(f)))
-      names.find(_.contains(f)).foreach(once)
+         if !warmups.exists(SparkEntry.matches(_, f)))
+      names.find(SparkEntry.matches(_, f)).foreach(once)
 
     sampleLoad("start")
     names.zipWithIndex.foreach { case (n, i) =>

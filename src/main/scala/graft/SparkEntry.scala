@@ -24,16 +24,27 @@ object SparkEntry {
       SubstringQueries.all ++ Round14Queries.all ++ TextArchiveQueries.all
 
   /** Terms of a query-name filter: comma-separated, trimmed, empty ones
-    * dropped. A name is selected when it contains any term. Bench's
+    * dropped. A name is selected when any term [[matches]] it. Bench's
     * `SPARK_GRAFT_BENCH_ONLY`, Verify's third argument and JobAudit's
     * second argument all take this syntax. */
   def filterTerms(filter: String): Seq[String] =
     filter.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
 
+  private val queryNumber = "q\\d+".r
+
+  /** Whether filter term `term` selects query `name`. A term shaped
+    * `q<digits>` names one query and must equal the name's whole numeric
+    * prefix (`q18` selects `q18_elb_pipeline`, not `q180_...`); any other
+    * term matches as a substring. */
+  def matches(name: String, term: String): Boolean = term match {
+    case queryNumber() => queryNumber.findPrefixOf(name).contains(term)
+    case _ => name.contains(term)
+  }
+
   /** Sorted names of the queries that `filter` selects (all when `None`). */
   def selectQueries(filter: Option[String]): Seq[String] = {
     val terms = filter.map(filterTerms)
-    queries.keys.toSeq.sorted.filter(n => terms.forall(_.exists(n.contains)))
+    queries.keys.toSeq.sorted.filter(n => terms.forall(_.exists(matches(n, _))))
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -90,9 +90,6 @@ object ElbParser {
       regexp_extract(fullUrl, "^[^:/?#]+://[^/?#]*?:(\\d+)(?:[/?#]|$)", 1),
       lit("")).try_cast("int")
 
-    // UA string: CSV already unquotes; strip any stray surrounding quotes
-    val ua = regexp_replace(col("user_agent"), "^\"+|\"+$", "")
-
     // with a barrier marker present, the rejection filter references it so
     // the non-deterministic projection below pins the filter in place —
     // from_csv then evaluates exactly once, in that projection. The
@@ -108,6 +105,8 @@ object ElbParser {
       .filter(keep)
       .drop("_once")
       .withColumn("time", ts)
+      // one UaClassify per row: CollapseProject keeps a costly triple-use apart
+      .withColumn("_ua", UaFunctions.uaClassify(col("user_agent")))
       .withColumns(Map(
         "client_ip" -> substring_index(col("client_ip_port"), ":", 1),
         "http_method" -> when(reqOk, req(0)).otherwise(lit("Unknown")),
@@ -119,10 +118,11 @@ object ElbParser {
         "path" -> when(reqOk, coalesce(parse_url(fullUrl, lit("PATH")), lit(""))),
         "query_params" -> when(reqOk, coalesce(parse_url(fullUrl, lit("QUERY")), lit(""))),
         "total_processing_time_ms" -> totalMs,
-        "ua_browser_family" -> UaFunctions.uaBrowserFamily(ua),
-        "ua_os_family" -> UaFunctions.uaOsFamily(ua),
-        "is_bot" -> UaFunctions.isBot(ua)
+        "ua_browser_family" -> col("_ua.browser"),
+        "ua_os_family" -> col("_ua.os"),
+        "is_bot" -> col("_ua.bot")
       ))
+      .drop("_ua")
   }
 
   /** '-'/''/unparseable → null, else double (reference: to_float,

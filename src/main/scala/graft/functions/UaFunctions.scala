@@ -1,168 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
-/** User-agent family extraction and bot classification as pure `Column`
-  * expressions (no UDF — everything stays inside whole-stage codegen and
-  * never becomes a pushdown/optimization barrier).
-  *
-  * The reference delegates to the `user-agents` Python library and keeps
-  * only `browser.family` / `os.family` (reference:
-  * advanced_elb_logs_etl.py:123-131). That library is a large
-  * community-maintained regex ruleset; here we re-express the
-  * major-family subset as ordered `when` chains over case-insensitive
-  * regexes, with the same `"Unknown"` fallbacks for missing/`"-"` UA
-  * strings. Rule ordering matters (e.g. Edge/Opera UAs also contain
-  * "Chrome"; Chrome UAs also contain "Safari"; KaiOS contains "iOS")
-  * and follows the detection order documented across public UA-parsing
-  * rulesets. Long-tail crawlers are covered by a generic bot/spider
-  * token capture (the convention the public rulesets use for families
-  * like AhrefsBot/PetalBot: the family IS the matched token).
-  */
+/** User-agent Columns: the [[UaClassify]] struct, or one of its fields. */
 object UaFunctions {
-
-  private def has(ua: Column, pat: String): Column = ua.rlike("(?i)" + pat)
-
-  /** Case-preserving bot/spider token, e.g. "AhrefsBot", "Bytespider". */
-  private val botTokenPat = "\\b([A-Za-z0-9_.-]*(?:[Bb]ot|[Ss]pider))\\b"
+  /** `struct<browser: string, os: string, bot: boolean>`, never null. */
+  def uaClassify(ua: Column): Column = column(UaClassify(expression(ua)))
 
   /** Browser family from a raw User-Agent string; null/empty/"-" → Unknown. */
-  def uaBrowserFamily(ua: Column): Column = {
-    val known =
-      // named bots first — they often embed browser tokens
-      when(has(ua, "googlebot"), "Googlebot")
-        .when(has(ua, "bingbot"), "bingbot")
-        .when(has(ua, "duckduckbot"), "DuckDuckBot")
-        .when(has(ua, "yandex(bot)?"), "YandexBot")
-        .when(has(ua, "baiduspider"), "Baiduspider")
-        .when(has(ua, "slurp"), "Yahoo! Slurp")
-        .when(has(ua, "facebookexternalhit"), "FacebookBot")
-        // generic crawler capture: the family is the bot/spider token
-        // itself (AhrefsBot, SemrushBot, Applebot, Bytespider, …), the
-        // convention public rulesets follow for the crawler long tail.
-        // The context guard keeps device models ending in "bot" (Cubot
-        // phones) from hijacking real browser UAs: crawlers either
-        // declare "(compatible; …)" / a +http contact URL, or carry no
-        // browser engine tokens at all
-        .when(ua.rlike(botTokenPat) &&
-            (has(ua, "compatible[;)]|\\+http") ||
-             !has(ua, "\\bchrome/|\\bsafari/|\\bfirefox/|\\bedge?/")),
-          regexp_extract(ua, botTokenPat, 1))
-        // HTTP tools and in-app/mail clients
-        .when(has(ua, "python-urllib"), "Python-urllib")
-        .when(has(ua, "python-requests"), "Python Requests")
-        .when(has(ua, "\\bcurl/"), "curl")
-        .when(has(ua, "\\bwget/"), "Wget")
-        .when(has(ua, "apache-httpclient"), "Apache-HttpClient")
-        .when(has(ua, "\\bokhttp"), "okhttp")
-        .when(has(ua, "^java/"), "Java")
-        .when(has(ua, "go-http-client"), "Go-http-client")
-        // text-mode browsers
-        .when(has(ua, "\\blynx/"), "Lynx")
-        .when(has(ua, "\\bw3m/"), "w3m")
-        .when(has(ua, "^links\\b"), "Links")
-        .when(has(ua, "headlesschrome"), "HeadlessChrome")
-        .when(has(ua, "phantomjs"), "PhantomJS")
-        .when(has(ua, "\\belectron/"), "Electron")
-        .when(has(ua, "whatsapp"), "WhatsApp")
-        .when(has(ua, "\\bfbav/|\\bfban/"), "Facebook")
-        .when(has(ua, "\\binstagram[ /]"), "Instagram")
-        .when(has(ua, "\\bgsa/"), "Google")
-        .when(has(ua, "\\bsnapchat/"), "Snapchat")
-        .when(has(ua, "twitter for "), "Twitter")
-        .when(has(ua, "\\bline/\\d"), "Line")
-        .when(has(ua, "thunderbird/"), "Thunderbird")
-        .when(has(ua, "microsoft outlook"), "Outlook")
-        // IE Mobile before every engine rule: WP8.1 "like iPhone" UAs
-        // masquerade with AppleWebKit/Safari tokens that would otherwise
-        // capture them as Safari
-        .when(has(ua, "iemobile"), "IE Mobile")
-        // real browsers, most-specific first
-        // uap-core groups the mobile variants (EdgA = Android, EdgiOS =
-        // iOS) under 'Edge Mobile'; desktop Edg/ and legacy Edge/ are 'Edge'
-        .when(has(ua, "\\bedga/|\\bedgios/"), "Edge Mobile")
-        // Windows Phone Edge carries Edge/NN plus a Mobile token
-        .when(has(ua, "\\bedge?/") && has(ua, "\\bmobile\\b"), "Edge Mobile")
-        .when(has(ua, "\\bedge?/"), "Edge")
-        .when(has(ua, "opera mini"), "Opera Mini")
-        .when(has(ua, "\\bopt/\\d"), "Opera Touch")
-        .when(has(ua, "\\bopr/") && has(ua, "\\bmobile\\b"), "Opera Mobile")
-        .when(has(ua, "\\bopr/|\\bopera"), "Opera")
-        .when(has(ua, "\\bmiuibrowser/"), "MiuiBrowser")
-        .when(has(ua, "\\bsamsungbrowser/"), "Samsung Internet")
-        .when(has(ua, "\\bucbrowser/"), "UC Browser")
-        .when(has(ua, "\\byabrowser/"), "Yandex Browser")
-        .when(has(ua, "\\bvivaldi/"), "Vivaldi")
-        .when(has(ua, "\\bbrave/"), "Brave")
-        .when(has(ua, "\\bsilk/"), "Amazon Silk")
-        .when(has(ua, "\\bqqbrowser/|\\bmqqbrowser/"), "QQ Browser")
-        .when(has(ua, "\\bhuaweibrowser/"), "Huawei Browser")
-        .when(has(ua, "\\bwhale/"), "Whale")
-        .when(has(ua, "\\bpuffin/"), "Puffin")
-        .when(has(ua, "\\bmaxthon"), "Maxthon")
-        .when(has(ua, "duckduckgo/"), "DuckDuckGo Mobile")
-        .when(has(ua, "coc_coc_browser/"), "Coc Coc")
-        .when(has(ua, "sailfishbrowser/"), "Sailfish Browser")
-        .when(has(ua, "konqueror"), "Konqueror")
-        .when(has(ua, "epiphany/"), "Epiphany")
-        // Android system WebView: "; wv)" marker + Chrome token
-        .when(has(ua, ";\\s?wv\\)") && has(ua, "\\bchrome/"), "Chrome Mobile WebView")
-        .when(has(ua, "\\bseamonkey/"), "SeaMonkey")
-        .when(has(ua, "\\bpalemoon/"), "Pale Moon")
-        .when(has(ua, "\\bwaterfox/"), "Waterfox")
-        .when(has(ua, "\\bfocus/\\d"), "Firefox Focus")
-        .when(has(ua, "\\bfxios/"), "Firefox iOS")
-        .when(has(ua, "\\bfirefox/") && has(ua, "mobile"), "Firefox Mobile")
-        .when(has(ua, "\\bfirefox/"), "Firefox")
-        .when(has(ua, "\\bcrios/"), "Chrome Mobile iOS")
-        .when(has(ua, "\\bchromium/"), "Chromium")
-        .when(has(ua, "\\bchrome/") && has(ua, "\\bmobile\\b"), "Chrome Mobile")
-        .when(has(ua, "\\bchrome/"), "Chrome")
-        // BlackBerry before the Safari rules: BB OS/BB10 UAs carry
-        // WebKit + Safari tokens
-        .when(has(ua, "blackberry|\\bbb10\\b"), "BlackBerry WebKit")
-        .when(has(ua, "\\bversion/.*\\bmobile/.*safari/"), "Mobile Safari")
-        .when(has(ua, "\\bsafari/"), "Safari")
-        .when(has(ua, "msie |trident/"), "IE")
-        .otherwise("Other")
-    when(ua.isNull || ua === "" || ua === "-", "Unknown").otherwise(known)
-  }
+  def uaBrowserFamily(ua: Column): Column = uaClassify(ua).getField("browser")
 
   /** OS family from a raw User-Agent string; null/empty/"-" → Unknown. */
-  def uaOsFamily(ua: Column): Column = {
-    val known =
-      when(has(ua, "windows phone"), "Windows Phone")
-        // KaiOS before the iOS rule: "KAIOS" contains the substring "ios"
-        .when(has(ua, "kaios"), "KaiOS")
-        .when(has(ua, "tizen"), "Tizen")
-        // SymbianOS/SymbOS/Series60 spellings all occur in the wild
-        .when(has(ua, "symbianos|symbos|series60"), "Symbian OS")
-        .when(has(ua, "blackberry|\\bbb10\\b"), "BlackBerry OS")
-        .when(has(ua, "windows nt|win64|wow64"), "Windows")
-        .when(has(ua, "android"), "Android")
-        // \b on the bare token: "axios", "BIOS" etc. contain "ios"
-        .when(has(ua, "iphone|ipad|ipod|\\bios\\b"), "iOS")
-        .when(has(ua, "mac os x|macintosh"), "Mac OS X")
-        .when(has(ua, "cros "), "Chrome OS")
-        .when(has(ua, "ubuntu"), "Ubuntu")
-        .when(has(ua, "fedora"), "Fedora")
-        // LG smart TVs spell it Web0S (zero); both before the Linux rule
-        .when(has(ua, "web0s|\\bwebos\\b"), "webOS")
-        .when(has(ua, "openbsd"), "OpenBSD")
-        .when(has(ua, "netbsd"), "NetBSD")
-        .when(has(ua, "sunos"), "Solaris")
-        .when(has(ua, "linux"), "Linux")
-        .when(has(ua, "freebsd"), "FreeBSD")
-        .otherwise("Other")
-    when(ua.isNull || ua === "" || ua === "-", "Unknown").otherwise(known)
-  }
+  def uaOsFamily(ua: Column): Column = uaClassify(ua).getField("os")
 
-  /** Bot heuristic: case-insensitive substring match over the reference's
-    * token list (reference: advanced_elb_logs_etl.py:128). "googlebot" is
-    * subsumed by "bot". Null/empty/"-" UA → false (reference's else-branch).
-    */
-  def isBot(ua: Column): Column =
-    when(ua.isNull || ua === "" || ua === "-", lit(false))
-      .otherwise(ua.rlike("(?i)bot|spider|crawler|python-urllib"))
+  /** The reference's bot token match; null/empty/"-" UA → false. */
+  def isBot(ua: Column): Column = uaClassify(ua).getField("bot")
 }

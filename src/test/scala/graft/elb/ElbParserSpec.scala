@@ -85,4 +85,41 @@ class ElbParserSpec extends SparkSpec {
     assert(dash.getAs[String]("ua_browser_family") == "Unknown")
     assert(dash.getAs[String]("ua_os_family") == "Unknown")
   }
+
+  test("parse output and cleaned-sink parquet keep their column order") {
+    // the 29 raw fields, the source file, then the 13 derived columns in
+    // the order `enrich`'s withColumns map yields them
+    val raw = ElbSchema.raw.fieldNames.toSeq :+ "log_source_file"
+    assert(parsed.columns.toSeq == raw ++ Seq("is_bot", "ua_browser_family",
+      "total_processing_time_ms", "full_url", "http_method", "query_params",
+      "ua_os_family", "client_ip", "protocol", "path", "hostname", "port",
+      "http_version"))
+    val out = java.nio.file.Files.createTempDirectory("elb-order").toString
+    graft.Pipeline.run(spark, graft.Pipeline.Config(
+      Seq(ElbFixtures.standardFixture()), out, s"$out/ip_geolocation_cache.parquet"))
+    // one part file, read alone: the physical schema, without the
+    // partition columns that directory discovery appends
+    val part = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$out/cleaned_logs"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get().toString
+    // parse output, then geo and feature columns; `time` is stringified in
+    // place and the four partition keys live in the directory names
+    assert(spark.read.parquet(part).columns.toSeq == parsed.columns.toSeq ++ Seq(
+      "status", "message", "countryName", "region", "regionName", "city",
+      "lat", "lon", "isp", "query", "api_fetch_timestamp",
+      "request_week_of_year", "status_code_type", "path_depth",
+      "path_main_segment", "request_day", "request_month", "request_year",
+      "request_hour", "request_day_of_week", "prev_time", "time_diff_min",
+      "new_session", "session_no", "session_id", "rolling_5min_req_count",
+      "rolling_1h_avg_proc_time"))
+  }
+
+  test("the parse plan classifies the UA once, with no regex ladder") {
+    import org.apache.spark.sql.catalyst.expressions.RLike
+    import graft.functions.UaClassify
+    val plan = ElbParser.parse(spark, Seq(ElbFixtures.standardFixture()))
+      .queryExecution.executedPlan
+    val exprs = plan.collect { case node => node.expressions }.flatten
+    assert(exprs.map(_.collect { case u: UaClassify => u }.size).sum == 1, plan)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[RLike])), plan)
+  }
 }

@@ -43,7 +43,8 @@ class NativeKernelsSpec extends SparkSpec {
       "normalize" -> NormalizeExpressions.normalize(col("text"), "NFKD"),
       "bootstrapWeights" ->
         BootstrapExpressions.bootstrapWeights(col("id").cast("string"), 8),
-      "jaroWinkler" -> StringSimilarityExpressions.jaroWinkler(col("text"), lit("martha")))
+      "jaroWinkler" -> StringSimilarityExpressions.jaroWinkler(col("text"), lit("martha")),
+      "uaClassify" -> UaFunctions.uaClassify(col("text")))
   }
 
   private def results(s: SparkSession): Seq[(String, Try[Seq[String]])] = {

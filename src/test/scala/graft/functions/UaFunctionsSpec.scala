@@ -453,4 +453,58 @@ class UaFunctionsSpec extends SparkSpec {
       assert(got(ua) == ((b, o, bot)), s"UA: $ua")
     }
   }
+
+  /** `(ua, browser, os, bot)` per input, classified on `session` from
+    * `partitions` executor partitions (an RDD, so the optimizer cannot
+    * fold the projection into a driver-side local relation). */
+  private def classifyOn(session: org.apache.spark.sql.SparkSession, uas: Seq[String],
+      partitions: Int): Seq[(String, (String, String, Boolean))] = {
+    import session.implicits._
+    val df = session.sparkContext.parallelize(uas, partitions).toDF("ua")
+      .select(col("ua"), UaFunctions.uaClassify(col("ua")).as("c"))
+      .select(col("ua"), col("c.browser"), col("c.os"), col("c.bot"))
+    val codegen = df.queryExecution.executedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+    assert(codegen == session.conf.get("spark.sql.codegen.wholeStage").toBoolean)
+    df.collect().toSeq
+      .map(r => r.getString(0) -> ((r.getString(1), r.getString(2), r.getBoolean(3))))
+  }
+
+  /** A session that evaluates every expression interpreted. */
+  private def interpreted: org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
+
+  private def direct(ua: String): (String, String, Boolean) = {
+    val r = UaClassify.classify(ua)
+    (r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getBoolean(2))
+  }
+
+  test("UaClassify gives the corpus answers with and without codegen") {
+    val uas = corpus.map(_._1) ++ Seq(null, "", "-", "\"-\"", "\"\"curl/8.4.0\"")
+    val unknown = ("Unknown", "Unknown", false)
+    val want = corpus.map { case (ua, b, o, bot) => ua -> ((b, o, bot)) } ++
+      uas.drop(corpus.size).init.map(_ -> unknown) :+
+      ("\"\"curl/8.4.0\"" -> (("curl", "Other", false)))
+    val compiled = classifyOn(spark.newSession(), uas, 4)
+    assert(compiled.toMap == want.toMap)
+    assert(classifyOn(interpreted, uas, 4).toMap == compiled.toMap)
+  }
+
+  test("UaClassify past its memo cap still gives every row the rules' answer") {
+    // every distinct UA twice, all in one partition, so the memo starts
+    // over mid-pass and the second visit of early UAs misses again
+    val distinct = (0 until UaClassify.MemoCap + 500)
+      .map(i => s"${corpus(i % corpus.size)._1} x/$i")
+    val uas = distinct ++ distinct
+    for (session <- Seq(spark.newSession(), interpreted)) {
+      val got = classifyOn(session, uas, 1)
+      assert(got.size == uas.size)
+      val wrong = got.filter { case (ua, answer) => answer != direct(ua) }
+      assert(wrong.isEmpty, wrong.take(3).mkString("\n"))
+    }
+  }
 }

@@ -7,9 +7,22 @@ import org.apache.spark.sql.SparkSession
   * `local[threads]` (unless Spark already received a `spark.master`, from
   * spark-submit or `-Dspark.master`), as many shuffle partitions as
   * threads unless the caller says otherwise, UTC session time, nanosecond
-  * parquet timestamps read as longs, no UI, WARN logging.
+  * parquet timestamps read as longs, no UI, WARN logging, and a generated
+  * code cache of 1000 classes.
   */
 object GraftSession {
+  /** Size of Spark's JVM-wide cache of compiled generated classes, in
+    * place of its default of 100. The cache is keyed by the compiling
+    * thread's class loader as well as the code, and in local mode the
+    * driver and the executor threads load classes through different
+    * loaders, so every whole-stage-codegen stage takes two entries. One
+    * `Pipeline.run` compiles about 113 classes and one pass of q000, q102
+    * and q161 about 200, so at 100 entries a repeated run recompiles most
+    * of them. Spark sizes the cache once, when the JVM first generates
+    * code, so this holds only when that happens under this session.
+    */
+  private val CodegenCacheEntries = 1000
+
   /** `SPARK_GRAFT_CPUS`, default 4. */
   def envThreads: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
 
@@ -22,6 +35,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -27,6 +27,13 @@ import graft.geo.{GeoCache, GeoResolver, OfflineGeoResolver}
   * resolves the misses and appends them to the cache eagerly, once, on the
   * calling thread.
   *
+  * At the 12k-line scale a pass is priced by fixed per-plan work more than
+  * by rows: a cold run compiles about 113 generated classes. Keep stages
+  * few and their generated code the same from call to call: code that
+  * differs per call (a limit inside generated code does) is compiled
+  * again on every run, whatever the codegen cache holds. See
+  * ARCHITECTURE.md, "Codegen working set".
+  *
   * Failure contract: every sink runs to completion even when another fails;
   * the first failure (in sink order) is rethrown with the rest attached as
   * suppressed, and the frame is unpersisted only once no sink can read it.

@@ -10,11 +10,12 @@ import graft.elb.ElbSchema
   * distinct IPs → misses = IPs ∉ cache → serial fetch → keep-last upsert →
   * rewrite cache → left-join logs → rename `country`→`countryName`.
   *
-  * Spark-first mapping: the miss set is a `left_anti` join; the cache is an
-  * append-only directory of parquet files — each run adds its fresh rows
-  * as new files and never rewrites or deletes one, so a concurrent run
-  * never loses a file it has listed — and the keep-last rule is applied on
-  * read (newest `api_fetch_timestamp` per `query`). The final enrichment
+  * Spark-first mapping: the miss set is a `left_anti` join against the
+  * cache's rows as written; the cache is an append-only directory of
+  * parquet files — each run adds its fresh rows as new files and never
+  * rewrites or deletes one, so a concurrent run never loses a file it has
+  * listed — and the keep-last rule is applied on read (newest
+  * `api_fetch_timestamp` per `query`), once per run. The final enrichment
   * is a *broadcast* left join (the cache is bounded by distinct IP
   * cardinality, orders of magnitude smaller than the 100 TB log side, so
   * it never deserves a shuffle of the big table).
@@ -28,7 +29,21 @@ object GeoCache {
     * Sequential runs never add a duplicate (misses are anti-joined against
     * the cache); only runs that resolved the same IP concurrently do.
     */
-  def load(spark: SparkSession, path: String): DataFrame = {
+  def load(spark: SparkSession, path: String): DataFrame = stored(spark, path) match {
+    case Some(rows) =>
+      val fields = ElbSchema.geo.fieldNames.toSeq
+      // struct ordering compares field by field: timestamp first, then the rest
+      val ranked = ("api_fetch_timestamp" +: fields.filterNot(
+        Set("query", "api_fetch_timestamp"))).map(col)
+      rows.groupBy("query").agg(max(struct(ranked: _*)).as("r"))
+        .select(fields.map(f => if (f == "query") col(f) else col(s"r.$f").as(f)): _*)
+    case None => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ElbSchema.geo)
+  }
+
+  /** The cache's rows as written, duplicates included; None when `path`
+    * holds no data file. */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] = {
     // Hadoop FS API, not java.io.File — the cache may live on S3/HDFS,
     // where a local-file existence check would silently report "absent"
     // and defeat the memoization on every run
@@ -36,19 +51,11 @@ object GeoCache {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasData = fs.exists(p) && (fs.getFileStatus(p).isFile ||
       fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-    if (hasData) {
-      val fields = ElbSchema.geo.fieldNames.toSeq
-      // struct ordering compares field by field: timestamp first, then the rest
-      val ranked = ("api_fetch_timestamp" +: fields.filterNot(
-        Set("query", "api_fetch_timestamp"))).map(col)
-      spark.read.schema(ElbSchema.geo).parquet(path)
-        .groupBy("query").agg(max(struct(ranked: _*)).as("r"))
-        .select(fields.map(f => if (f == "query") col(f) else col(s"r.$f").as(f)): _*)
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ElbSchema.geo)
+    if (hasData) Some(spark.read.schema(ElbSchema.geo).parquet(path)) else None
   }
 
-  /** Distinct non-null client IPs in `logs` that are absent from `cache`. */
+  /** Distinct non-null client IPs in `logs` that are absent from `cache`.
+    * `cache` may hold several rows per `query`: any one of them is a hit. */
   def misses(logs: DataFrame, cache: DataFrame): DataFrame =
     logs.select(col("client_ip")).where(col("client_ip").isNotNull).distinct()
       .join(cache.select(col("query")), col("client_ip") === col("query"), "left_anti")
@@ -98,10 +105,15 @@ object GeoCache {
   }
 
   /** Full enrichment stage: resolve cache misses via `resolver`, append
-    * them to the cache, re-load it, then broadcast-left-join onto `logs`
-    * and apply the reference's column standardization (`country` →
-    * `countryName`). The re-load (not an in-memory union) also picks up
-    * rows a concurrent run appended meanwhile, deduplicated by [[load]].
+    * them to the cache, load it, then broadcast-left-join onto `logs` and
+    * apply the reference's column standardization (`country` →
+    * `countryName`).
+    *
+    * The misses are anti-joined against the cache's rows as written: any
+    * row for an IP makes it a hit, so finding them needs no newest-row
+    * aggregate, and [[load]] runs once, after the append. Loading after
+    * the append (not an in-memory union) also picks up rows a concurrent
+    * run appended meanwhile, deduplicated by [[load]].
     *
     * `maxMissesPerRun` bounds the driver-side collect: at 100 TB the
     * distinct-miss set alone can be tens of millions of rows — an
@@ -115,19 +127,17 @@ object GeoCache {
   def enrich(spark: SparkSession, logs: DataFrame, cachePath: String,
       resolver: GeoResolver, maxMissesPerRun: Int = 100000): DataFrame = {
     import spark.implicits._
-    val cache = load(spark, cachePath)
-    val (missIps, deferred) = selectMisses(spark, logs, cache, maxMissesPerRun)
+    val hits = stored(spark, cachePath).getOrElse(Seq.empty[String].toDF("query"))
+    val (missIps, deferred) = selectMisses(spark, logs, hits, maxMissesPerRun)
     if (deferred > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"geo cache: resolved the per-run cap of $maxMissesPerRun misses; " +
         s"deferring $deferred to the next run (memo cache converges)")
-    val updated = if (missIps.nonEmpty) {
-      val fresh = resolver.resolve(missIps).toDF()
-        .select(ElbSchema.geo.fieldNames.map(col).toSeq: _*)
-      append(fresh, cachePath)
-      load(spark, cachePath)
-    } else cache
-    logs.join(broadcast(updated), logs("client_ip") === updated("query"), "left")
+    if (missIps.nonEmpty)
+      append(resolver.resolve(missIps).toDF()
+        .select(ElbSchema.geo.fieldNames.map(col).toSeq: _*), cachePath)
+    val cache = load(spark, cachePath)
+    logs.join(broadcast(cache), logs("client_ip") === cache("query"), "left")
       .withColumnRenamed("country", "countryName")
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
-import graft.elb.ElbParser
+import graft.elb.{ElbParser, Sinks}
 
 /** Minimal CLI over the parse stage: `runMain graft.tools.ElbParseCli
   * <path.gz> [<path.gz> ...]` — parses ALB access logs and prints the
@@ -25,7 +25,7 @@ object ElbParseCli {
       "ua_os_family", "is_bot", "log_source_file")
     derived.show(20, truncate = false)
     println("sample_json:")
-    df.limit(3).toJSON.collect().foreach(println)
+    Sinks.sampleJson(df, 3).foreach(println)
     df.unpersist()
   }
 }

@@ -95,6 +95,18 @@ class PipelineSpec extends SparkSpec {
     assert(sample.size == 5 && sample == Sinks.sampleJson(ElbParser.parse(spark, Seq(fixture))))
   }
 
+  test("a repeated run over the same input compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the warm geo cache of the first run, so both runs plan the same queries
+    def run(): Seq[String] = Pipeline.run(spark, Pipeline.Config(
+      Seq(ElbFixtures.standardFixture()), outDir, s"$outDir/ip_geolocation_cache.parquet"))
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+      "the second run compiled classes the first one had compiled")
+  }
+
   test("a failing sink fails the run after the other sinks finish, leaving nothing behind") {
     val out = Files.createTempDirectory("pipeline-fail")
     // a regular file where the reports directory belongs: the error and

@@ -110,6 +110,78 @@ class GeoCacheSpec extends SparkSpec {
     assert(cache.select("query").distinct().count() == 90)
   }
 
+  test("an IP with two cache rows, as concurrent runs leave it, is a hit") {
+    import spark.implicits._
+    val cachePath = Files.createTempDirectory("geo").resolve("cache.parquet").toString
+    def rec(ts: String) = Seq(GeoRecord("success", None, Some("Twice"), None, None, None,
+      None, None, None, None, "10.0.3.1", Timestamp.valueOf(ts))).toDF()
+    GeoCache.append(rec("2025-01-01 00:00:00"), cachePath)
+    GeoCache.append(rec("2025-01-02 00:00:00"), cachePath)
+    val logs = Seq("10.0.3.1", "10.0.3.2", "10.0.3.1").toDF("client_ip")
+    val raw = spark.read.schema(ElbSchema.geo).parquet(cachePath)
+    assert(raw.count() == 2)
+    for (cache <- Seq(raw, GeoCache.load(spark, cachePath)))
+      assert(GeoCache.selectMisses(spark, logs, cache, 10) == (Seq("10.0.3.2"), 0L))
+    val calls = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val counting = new GeoResolver {
+      private val inner = new OfflineGeoResolver()
+      def resolve(ips: Seq[String]) = { calls += ips; inner.resolve(ips) }
+    }
+    val enriched = GeoCache.enrich(spark, logs, cachePath, counting)
+    assert(calls.toSeq == Seq(Seq("10.0.3.2")))
+    // the duplicate cache rows still join as one, so no log row is repeated
+    assert(enriched.count() == 3)
+    assert(enriched.filter(col("countryName") === "Twice").count() == 2)
+  }
+
+  test("enrich runs one load aggregate per call") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val cachePath = Files.createTempDirectory("geo-loads").resolve("cache.parquet").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sentinel = "geo_loads_sentinel"
+    def readsCache(p: LogicalPlan) = p.exists {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths.exists(_.toUri.getPath == cachePath)
+        case _ => false
+      }
+      case _ => false
+    }
+    // the per-IP aggregates `load` plans over the cache directory, in the
+    // actions one enrich call runs plus one on its result
+    def loadsPerCall(logs: org.apache.spark.sql.DataFrame): Int = {
+      plans.clear()
+      // read a cache column: a bare count() lets the optimizer drop the join
+      GeoCache.enrich(spark, logs, cachePath, new OfflineGeoResolver())
+        .select("countryName").collect()
+      spark.range(1).toDF(sentinel).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def seen = plans.toArray(Array.empty[LogicalPlan]).toSeq
+      while (!seen.exists(_.output.exists(_.name == sentinel)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      seen.map(_.collect {
+        case a: Aggregate if readsCache(a) && a.groupingExpressions.exists {
+          case r: AttributeReference => r.name == "query"; case _ => false } => a
+      }.size).sum
+    }
+    spark.listenerManager.register(listener)
+    try {
+      def ips(n: Int) = (1 to n).map(i => s"10.0.4.$i").toDF("client_ip")
+      // an empty cache, a cache with misses to append, a cache that holds every IP
+      assert(loadsPerCall(ips(5)) == 1)
+      assert(loadsPerCall(ips(8)) == 1)
+      assert(loadsPerCall(ips(8)) == 1)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("a leftover stage directory from a crashed append is ignored") {
     import spark.implicits._
     val cachePath = Files.createTempDirectory("geo").resolve("cache.parquet").toString

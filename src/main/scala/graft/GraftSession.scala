@@ -16,7 +16,7 @@ object GraftSession {
     * thread's class loader as well as the code, and in local mode the
     * driver and the executor threads load classes through different
     * loaders, so every whole-stage-codegen stage takes two entries. One
-    * `Pipeline.run` compiles about 113 classes and one pass of q000, q102
+    * `Pipeline.run` compiles about 93 classes and one pass of q000, q102
     * and q161 about 200, so at 100 entries a repeated run recompiles most
     * of them. Spark sizes the cache once, when the JVM first generates
     * code, so this holds only when that happens under this session.

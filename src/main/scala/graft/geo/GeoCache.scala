@@ -1,7 +1,12 @@
 package graft.geo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.elb.ElbSchema
 
 /** Parquet-backed memo cache for geolocation lookups + the enrichment join.
@@ -15,30 +20,51 @@ import graft.elb.ElbSchema
   * parquet files — each run adds its fresh rows as new files and never
   * rewrites or deletes one, so a concurrent run never loses a file it has
   * listed — and the keep-last rule is applied on read (newest
-  * `api_fetch_timestamp` per `query`), once per run. The final enrichment
-  * is a *broadcast* left join (the cache is bounded by distinct IP
+  * `api_fetch_timestamp` per `query`), once per run, on the driver. The
+  * final enrichment is a *broadcast* left join (the cache is bounded by distinct IP
   * cardinality, orders of magnitude smaller than the 100 TB log side, so
   * it never deserves a shuffle of the big table).
   */
 object GeoCache {
 
+  /** Rows per slice of the frame [[load]] returns. A cache row is about
+    * 200 bytes, so a slice stays under the 1000 KiB task size that Spark
+    * warns about; the broadcast collects the slices back in one job. */
+  private val RowsPerSlice = 4096
+
   /** Schema-defensive cache load: missing path / empty dir → empty frame
     * with the canonical 12-column schema (reference: advanced_elb_logs_etl.py:201-229).
     * Keeps one row per `query`: the newest `api_fetch_timestamp`, ties
-    * broken by the remaining columns so the survivor is deterministic.
-    * Sequential runs never add a duplicate (misses are anti-joined against
-    * the cache); only runs that resolved the same IP concurrently do.
+    * broken by the remaining columns in schema order so the survivor is
+    * deterministic. Sequential runs never add a duplicate (misses are
+    * anti-joined against the cache); only runs that resolved the same IP
+    * concurrently do.
+    *
+    * The rows are collected once and the rule is applied on the driver:
+    * the enrichment join broadcasts the cache, so it comes to the driver
+    * anyway, and a per-`query` aggregate over it planned as a sort-based
+    * aggregate with two sort stages of generated code. Rows are compared
+    * with Catalyst's own ordering, so ties, nulls, NaN and -0.0 rank as
+    * they did under `max(struct(api_fetch_timestamp, rest...))`, and an
+    * equal row keeps the one seen first, as `max`'s buffer does. The
+    * survivors come back as a frame over their internal rows, in slices
+    * of [[RowsPerSlice]]; at ~170k cached IPs it joined faster than a
+    * local relation of the same rows.
     */
-  def load(spark: SparkSession, path: String): DataFrame = stored(spark, path) match {
-    case Some(rows) =>
-      val fields = ElbSchema.geo.fieldNames.toSeq
-      // struct ordering compares field by field: timestamp first, then the rest
-      val ranked = ("api_fetch_timestamp" +: fields.filterNot(
-        Set("query", "api_fetch_timestamp"))).map(col)
-      rows.groupBy("query").agg(max(struct(ranked: _*)).as("r"))
-        .select(fields.map(f => if (f == "query") col(f) else col(s"r.$f").as(f)): _*)
-    case None => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ElbSchema.geo)
+  def load(spark: SparkSession, path: String): DataFrame = {
+    val schema = ElbSchema.geo
+    val ranked = ("api_fetch_timestamp" +: schema.fieldNames.toSeq.filterNot(
+      Set("query", "api_fetch_timestamp"))).map(schema.fieldIndex)
+    val ordering = new InterpretedOrdering(ranked.map(i =>
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
+    val query = schema.fieldIndex("query")
+    val newest = mutable.LinkedHashMap.empty[UTF8String, InternalRow]
+    for (row <- stored(spark, path).fold(Array.empty[InternalRow])(GraftColumns.collectInternal)) {
+      val key = row.getUTF8String(query)
+      if (newest.get(key).forall(ordering.compare(row, _) > 0)) newest(key) = row
+    }
+    val slices = 1 + newest.size / RowsPerSlice
+    GraftColumns.dataFrame(spark, spark.sparkContext.parallelize(newest.values.toSeq, slices), schema)
   }
 
   /** The cache's rows as written, duplicates included; None when `path`

@@ -4,7 +4,37 @@ import graft.elb.ElbFixtures
 import java.nio.file.Files
 
 class PipelineSpec extends SparkSpec {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
   import org.apache.spark.sql.functions._
+
+  private val sentinel = "pipeline-spec-sentinel"
+
+  /** The listener events of the jobs and SQL executions `body` starts,
+    * in order, up to a sentinel job run after it. Events arrive in the
+    * order they were posted: once the sentinel is seen, every job the
+    * body started has been recorded. */
+  private def recorded(body: => Unit): Seq[SparkListenerEvent] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
+    def isSentinel(e: SparkListenerEvent) = e match {
+      case j: SparkListenerJobStart => j.properties.getProperty("spark.jobGroup.id") == sentinel
+      case _ => false
+    }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      def events = seen.toArray(Array.empty[SparkListenerEvent]).toSeq
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!events.exists(isSentinel) && System.nanoTime() < deadline) Thread.sleep(20)
+      events.takeWhile(!isSentinel(_))
+    } finally sc.removeSparkListener(listener)
+  }
 
   lazy val outDir = {
     val out = Files.createTempDirectory("pipeline-out").toString
@@ -140,42 +170,81 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink jobs carry the calling thread's job group, per call") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinel = "pipeline-spec-sentinel"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
     val sc = spark.sparkContext
     val fixture = ElbFixtures.standardFixture()
-    def runIn(group: String): Seq[String] = {
-      groups.clear()
+    def runIn(group: String): Seq[String] = recorded {
       sc.setJobGroup(group, group)
       try Pipeline.run(spark, Pipeline.Config(Seq(fixture),
         Files.createTempDirectory("pipeline-group").toString,
         Files.createTempDirectory("pipeline-group-geo").resolve("c.parquet").toString))
       finally sc.clearJobGroup()
-      // listener events arrive in job order: once the sentinel job is seen,
-      // every job the run started has been recorded
-      sc.setJobGroup(sentinel, sentinel)
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
-      groups.toArray(Array.empty[String]).toSeq.filterNot(_ == sentinel)
+    }.collect { case j: SparkListenerJobStart =>
+      String.valueOf(j.properties.getProperty("spark.jobGroup.id"))
     }
-    sc.addSparkListener(listener)
-    try {
-      val first = runIn("pipeline-group-a")
-      // parse/geo jobs, the sample and at least five sink writes
-      assert(first.size > 6 && first.forall(_ == "pipeline-group-a"), first)
-      // a second call from another thread, under another group, must not
-      // reuse threads that still carry the first group
-      var second: scala.util.Try[Seq[String]] = null
-      val other = new Thread(() => second = scala.util.Try(runIn("pipeline-group-b")))
-      other.start()
-      other.join()
-      assert(second.get.size > 6 && second.get.forall(_ == "pipeline-group-b"), second)
-    } finally sc.removeSparkListener(listener)
+    val first = runIn("pipeline-group-a")
+    // parse/geo jobs, the sample and at least five sink writes
+    assert(first.size > 6 && first.forall(_ == "pipeline-group-a"), first)
+    // a second call from another thread, under another group, must not
+    // reuse threads that still carry the first group
+    var second: scala.util.Try[Seq[String]] = null
+    val other = new Thread(() => second = scala.util.Try(runIn("pipeline-group-b")))
+    other.start()
+    other.join()
+    assert(second.get.size > 6 && second.get.forall(_ == "pipeline-group-b"), second)
+  }
+
+  test("the sinks read staged rows: no columnar cache in any plan, three jobs fewer") {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    // jobs the same run started when the sinks read the frame through a
+    // columnar cache (InMemoryRelation): each sink's adaptive plan then
+    // submitted a job of its own to materialize the cache
+    val columnarCacheJobs = 19
+    val out = Files.createTempDirectory("pipeline-jobs")
+    val events = recorded(Pipeline.run(spark, Pipeline.Config(
+      Seq(ElbFixtures.standardFixture()), out.toString, s"$out/geo.parquet")))
+    val jobs = events.count(_.isInstanceOf[SparkListenerJobStart])
+    val plans = events.collect {
+      case e: SparkListenerSQLExecutionStart => e.physicalPlanDescription
+      case e: SparkListenerSQLAdaptiveExecutionUpdate => e.physicalPlanDescription
+    }
+    assert(plans.exists(_.contains("InsertIntoHadoopFsRelationCommand")), plans)
+    for (p <- plans)
+      assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), p)
+    assert(jobs <= columnarCacheJobs - 3, s"$jobs jobs, against $columnarCacheJobs")
+  }
+
+  test("an input that breaks after the geo stage fails the run while staging, releasing its rows") {
+    import graft.geo.{GeoRecord, GeoResolver, OfflineGeoResolver}
+    val input = java.nio.file.Paths.get(ElbFixtures.standardFixture())
+    val out = Files.createTempDirectory("pipeline-corrupt")
+    // the resolver runs after the geo stage has read the input and before
+    // the feature frame is staged: it leaves a corrupt .gz behind
+    val corrupting = new GeoResolver {
+      def resolve(ips: Seq[String]): Seq[GeoRecord] = {
+        Files.write(input, "this is not gzip".getBytes("UTF-8"))
+        new OfflineGeoResolver().resolve(ips)
+      }
+    }
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception] {
+      Pipeline.run(spark, Pipeline.Config(
+        Seq(input.toString), out.toString, s"$out/geo.parquet", corrupting))
+    }
+    // the read failure itself, not an error raised while reporting it
+    assert(String.valueOf(e.getMessage).contains("FAILED_READ_FILE"), e)
+    assert(Files.exists(out.resolve("geo.parquet")), "the geo stage did not finish")
+    // staging failed on the calling thread, so no sink was started
+    assert(Files.list(out).toArray.toSeq.map(_.toString.split('/').last) == Seq("geo.parquet"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
+  }
+
+  test("a run logs no ERROR line") {
+    val out = Files.createTempDirectory("pipeline-log")
+    val (_, errors) = LogCapture.lines(org.apache.logging.log4j.Level.ERROR) {
+      Pipeline.run(spark, Pipeline.Config(
+        Seq(ElbFixtures.standardFixture()), out.toString, s"$out/geo.parquet"))
+    }
+    assert(errors.isEmpty, errors.mkString("\n"))
   }
 }

@@ -134,8 +134,8 @@ class GeoCacheSpec extends SparkSpec {
     assert(enriched.filter(col("countryName") === "Twice").count() == 2)
   }
 
-  test("enrich runs one load aggregate per call") {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+  test("enrich reads the cache in two actions per call and aggregates it in none") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeSet
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -148,16 +148,13 @@ class GeoCacheSpec extends SparkSpec {
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val sentinel = "geo_loads_sentinel"
-    def readsCache(p: LogicalPlan) = p.exists {
-      case l: LogicalRelation => l.relation match {
-        case r: HadoopFsRelation => r.location.rootPaths.exists(_.toUri.getPath == cachePath)
-        case _ => false
-      }
-      case _ => false
-    }
-    // the per-IP aggregates `load` plans over the cache directory, in the
-    // actions one enrich call runs plus one on its result
-    def loadsPerCall(logs: org.apache.spark.sql.DataFrame): Int = {
+    // the columns of every scan of the cache directory in `p`
+    def cacheColumns(p: LogicalPlan) = AttributeSet(p.collect {
+      case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.location.rootPaths.exists(_.toUri.getPath == cachePath) => l.output
+    }.flatten)
+    // the plans of the actions one enrich call runs, plus one on its result
+    def actionsPerCall(logs: org.apache.spark.sql.DataFrame): Seq[LogicalPlan] = {
       plans.clear()
       // read a cache column: a bare count() lets the optimizer drop the join
       GeoCache.enrich(spark, logs, cachePath, new OfflineGeoResolver())
@@ -167,19 +164,65 @@ class GeoCacheSpec extends SparkSpec {
       def seen = plans.toArray(Array.empty[LogicalPlan]).toSeq
       while (!seen.exists(_.output.exists(_.name == sentinel)) && System.nanoTime() < deadline)
         Thread.sleep(20)
-      seen.map(_.collect {
-        case a: Aggregate if readsCache(a) && a.groupingExpressions.exists {
-          case r: AttributeReference => r.name == "query"; case _ => false } => a
-      }.size).sum
+      seen.filterNot(_.output.exists(_.name == sentinel))
+    }
+    def cacheReads(actions: Seq[LogicalPlan]): Int = {
+      for (p <- actions; a <- p.collect { case a: Aggregate => a })
+        assert(!a.references.exists(cacheColumns(p).contains), s"aggregate over the cache:\n$a")
+      actions.count(cacheColumns(_).nonEmpty)
     }
     spark.listenerManager.register(listener)
     try {
       def ips(n: Int) = (1 to n).map(i => s"10.0.4.$i").toDF("client_ip")
-      // an empty cache, a cache with misses to append, a cache that holds every IP
-      assert(loadsPerCall(ips(5)) == 1)
-      assert(loadsPerCall(ips(8)) == 1)
-      assert(loadsPerCall(ips(8)) == 1)
+      // an empty cache (only the load after the append reads it), a cache
+      // with misses to append, a cache that holds every IP
+      assert(cacheReads(actionsPerCall(ips(5))) == 1)
+      assert(cacheReads(actionsPerCall(ips(8))) == 2)
+      assert(cacheReads(actionsPerCall(ips(8))) == 2)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("load keeps the row max(struct(api_fetch_timestamp, rest...)) keeps, ties included") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("geo-ties").resolve("cache.parquet").toString
+    val t1 = Timestamp.valueOf("2025-01-01 00:00:00")
+    val t2 = Timestamp.valueOf("2025-01-02 00:00:00")
+    def rec(ip: String, ts: Timestamp, country: Option[String] = Some("C"),
+        lat: Option[Double] = Some(1.0), lon: Option[Double] = Some(1.0),
+        isp: Option[String] = Some("isp")) =
+      GeoRecord("success", None, country, None, None, None, Some("city"), lat, lon, isp, ip, ts)
+    // three files, so each IP's rows arrive from different files and in
+    // different orders; each IP has at least three rows
+    val files = Seq(
+      Seq(
+        rec("10.0.5.1", t1, country = None), rec("10.0.5.2", t2, lat = Some(-0.0), lon = Some(2.0)),
+        rec("10.0.5.3", t2, lat = Some(Double.NaN), lon = None), rec("10.0.5.4", null),
+        rec("10.0.5.5", t2, isp = None)),
+      Seq(
+        rec("10.0.5.1", t1, country = Some("B")), rec("10.0.5.2", t2, lat = Some(0.0), lon = Some(1.0)),
+        rec("10.0.5.3", t2, lat = Some(5.0), lon = Some(9.0)), rec("10.0.5.4", t1, country = None),
+        rec("10.0.5.5", t2, isp = Some("a"))),
+      Seq(
+        rec("10.0.5.1", t1, country = Some("A")), rec("10.0.5.2", t2, lat = Some(-1.0), lon = Some(3.0)),
+        rec("10.0.5.3", t2, lat = Some(Double.NaN), lon = Some(0.0)),
+        rec("10.0.5.4", t1, country = Some("Z"), lat = None), rec("10.0.5.5", t1, isp = Some("z"))))
+    for (rows <- files) GeoCache.append(rows.toDF(), path)
+    val fields = ElbSchema.geo.fieldNames.toSeq
+    val ranked = ("api_fetch_timestamp" +: fields.filterNot(
+      Set("query", "api_fetch_timestamp"))).map(col)
+    val byMax = spark.read.schema(ElbSchema.geo).parquet(path)
+      .groupBy("query").agg(max(struct(ranked: _*)).as("r"))
+      .select(fields.map(f => if (f == "query") col(f) else col(s"r.$f").as(f)): _*)
+    // toString tells -0.0 from 0.0, which Row equality does not
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val loaded = GeoCache.load(spark, path)
+    assert(loaded.schema == ElbSchema.geo)
+    assert(rows(loaded) == rows(byMax))
+    assert(loaded.count() == 5)
+    // -0.0 ties 0.0 and lon decides; NaN ties NaN and ranks above 5.0
+    val kept = loaded.collect().map(r => r.getAs[String]("query") -> r).toMap
+    assert(kept("10.0.5.2").getAs[Double]("lon") == 2.0)
+    assert(kept("10.0.5.3").getAs[Double]("lon") == 0.0)
   }
 
   test("a leftover stage directory from a crashed append is ignored") {

@@ -20,8 +20,8 @@ import graft.geo.{GeoCache, GeoResolver, OfflineGeoResolver}
   * work (SURVEY.md §7.4.7). It is staged as rows: the frame's internal
   * rows, persisted MEMORY_AND_DISK (spill-safe at scale) and counted once
   * on the calling thread, then wrapped back into a DataFrame that the
-  * sinks read as a plain RDD scan. A columnar cache (`Dataset.persist`)
-  * would be built lazily by whichever sink got there first, and each
+  * sinks read as a plain RDD scan (`GraftColumns.dataFrame`). A columnar
+  * cache would be built lazily by whichever sink got there first, and each
   * sink's adaptive plan submitted a job of its own to materialize it and
   * compiled its own column accessor and batch-stats filter. Row staging
   * keeps the lineage, so a lost block is recomputed rather than failing
@@ -32,9 +32,9 @@ import graft.geo.{GeoCache, GeoResolver, OfflineGeoResolver}
   * are submitted together: three of them end in a single-task `coalesce(1)`
   * write, which run one after another leaves the other cores idle. The
   * `limit(5)` sample job likewise runs beside the geo stage rather than
-  * ahead of it. The geo side effect is untouched: `GeoCache.enrich` still
-  * resolves the misses and appends them to the cache eagerly, once, on the
-  * calling thread.
+  * ahead of it. The geo side effect is untouched: `GeoCache.enrich` reads
+  * the cache once, then resolves the misses and appends them to the cache
+  * eagerly, once, on the calling thread.
   *
   * At the 12k-line scale a pass is priced by fixed per-plan work more than
   * by rows: a cold run compiles about 93 generated classes. Keep stages

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -1036,8 +1036,8 @@ object Dedup {
     * a single lazy plan — the two references to the large-star edge set
     * inside the small-star construction are identical subtrees, so
     * Spark's exchange reuse executes the large-star shuffle once — and
-    * the round's only materialization is the stats-resetting eager
-    * checkpoint ([[checkpointResetStats]]) of the small-star output, so
+    * the round's only materialization is the stats-free eager
+    * checkpoint ([[graft.Checkpoint]]) of the small-star output, so
     * neither lineage nor carried size estimates compound across rounds.
     * Convergence is detected by an order-independent (count, xor-of-hash)
     * fingerprint of the edge set, collected for FREE during that same
@@ -1050,25 +1050,6 @@ object Dedup {
     * `pairs` are returned — singletons are their own keeper by
     * definition.
     */
-  /** Eagerly materialize AND drop carried plan statistics. Spark 4's
-    * `localCheckpoint` preserves the checkpointed plan's estimated stats
-    * (`LogicalRDD.rewriteStatsAndConstraints`) — correct for a one-shot
-    * checkpoint, catastrophic inside an iterative SELF-join loop, where
-    * the estimated `sizeInBytes` SQUARES every round: the carried stat is
-    * a BigInt whose bit-length doubles per iteration, and by ~round 20
-    * the driver spends minutes inside `BigInteger.multiply` in the stats
-    * visitor before a single task runs (observed live on the q161 jump
-    * loop via jstack). Rebuilding the frame from the checkpointed RDD
-    * through the public `createDataFrame` resets stats to the default —
-    * these label tables must shuffle-join anyway, so no broadcast
-    * opportunity is lost; the per-row InternalRow↔Row conversion is
-    * narrow, pipelined, and invisible next to the join shuffle.
-    */
-  private[ops] def checkpointResetStats(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // materialize the pair set FIRST: the id/edge derivations below
     // reference `pairs` repeatedly, so an unmaterialized upstream (the
@@ -1083,26 +1064,17 @@ object Dedup {
     * converged star-forest edge set (every non-root → component min).
     */
   private def starForest(p: DataFrame, maxIter: Int): DataFrame = {
-    // Edge-SET fingerprint: cardinality + order-independent XOR of a
-    // per-edge 64-bit hash. `bit_xor` is exactly associative/commutative
-    // and cannot overflow (unlike `sum` under ANSI), so the pair is a
-    // deterministic set digest. It is collected as an `observe` metric
+    // Edge-SET fingerprint: the checkpoint's row count + an order-free XOR
+    // of a per-edge 64-bit hash. `bit_xor` is exactly associative and
+    // commutative and cannot overflow (unlike `sum` under ANSI), so the
+    // pair is a deterministic set digest. It is collected as a metric
     // DURING the eager checkpoint's own job (CollectMetricsExec is an
     // accumulator in the scan, reported on the action's SQL-execution
     // end) — zero extra jobs per round. Equality across one alternation
     // is (almost-surely) the fixpoint; the one exact probe below makes
     // it a proof, and a hash collision merely costs one extra round.
-    def checkpointWithFingerprint(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = Observation()
-      val ck = checkpointResetStats(df.observe(obs,
-        count(lit(1)).as("n"), expr("bit_xor(xxhash64(a, b))").as("h")))
-      val m = obs.get
-      val h = m.get("h") match {
-        case Some(x: Long) => x
-        case _             => 0L // bit_xor over zero rows is null
-      }
-      (ck, (m("n").asInstanceOf[Long], h))
-    }
+    def checkpointWithFingerprint(df: DataFrame) =
+      graft.Checkpoint(df, expr("bit_xor(xxhash64(a, b))").as("h"))
     // canonical hi→lo orientation; both star phases preserve it. This
     // first materialization runs under the session's own AQE setting —
     // it consumes the (possibly large, possibly skewed) checkpointed

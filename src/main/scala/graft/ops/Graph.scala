@@ -464,7 +464,7 @@ object Graph {
     * set (two co-keyed joins) + one degree count — O(E) work, O(V)
     * state. Survivor tables only SHRINK, so round count is bounded by
     * the degeneracy ordering depth (6 rounds on the sf0.1 pseudo-graph);
-    * each round materializes through [[Dedup.checkpointResetStats]] (the
+    * each round materializes through [[graft.Checkpoint]] (the
     * double self-reference per round would otherwise square carried
     * size estimates — the q161 driver-stall lesson) with the survivor
     * count collected free via `observe` during the same job. Shrinkage
@@ -490,18 +490,12 @@ object Graph {
     val sym = und.select(col("a").as("i"), col("b").as("nb"))
       .union(und.select(col("b"), col("a")))
       .localCheckpoint(true)
-    def ckCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Dedup.checkpointResetStats(
-        df.observe(obs, count(lit(1)).as("n")))
-      (ck, obs.get("n").asInstanceOf[Long])
-    }
     // survivor degree count: edges whose neighbor survives, grouped by
     // i over ALL i — one semi-filter on the staged side + one groupBy
     def liveDeg(alive: DataFrame, out: String): DataFrame =
       sym.join(alive.select(col("i").as("nb")), Seq("nb"), "left_semi")
         .groupBy("i").agg(count(lit(1)).as(out))
-    var (alive, n) = ckCount(sym.select(col("i")).distinct())
+    var (alive, n) = graft.Checkpoint(sym.select(col("i")).distinct())
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
@@ -511,7 +505,7 @@ object Graph {
       // again. The i-side alive join the old round body paid is
       // therefore redundant inside the loop (kept only for the final
       // degree report, where sub-k counts must not leak out).
-      val (next, n2) = ckCount(
+      val (next, n2) = graft.Checkpoint(
         liveDeg(alive, "c").where(col("c") >= k).select("i"))
       converged = n2 == n
       alive = next
@@ -589,13 +583,7 @@ object Graph {
     */
   def ancestorClosure(parents: DataFrame, childCol: String,
       parentCol: String, maxDepth: Int = 1 << 20): DataFrame = {
-    def ckCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Dedup.checkpointResetStats(
-        df.observe(obs, count(lit(1)).as("n")))
-      (ck, obs.get("n").asInstanceOf[Long])
-    }
-    var (p, n) = ckCount(parents
+    var (p, n) = graft.Checkpoint(parents
       .select(col(childCol).cast("long").as("desc"),
         col(parentCol).cast("long").as("anc"))
       .where(col("desc") =!= col("anc"))
@@ -604,7 +592,7 @@ object Graph {
     var span = 1L
     var converged = false
     while (!converged && span < 2L * maxDepth) {
-      val (next, n2) = ckCount(
+      val (next, n2) = graft.Checkpoint(
         p.unionByName(
           p.as("x").join(p.as("y"), col("x.anc") === col("y.desc"))
             .select(col("x.desc").as("desc"), col("y.anc").as("anc"),

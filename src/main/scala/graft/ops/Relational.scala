@@ -273,7 +273,7 @@ object Relational {
     *
     * Scale shape: per step, one batch-vs-state equi-join (broadcast
     * when the delta is small — the common case) plus a union; view and
-    * accumulators materialize through [[Dedup.checkpointResetStats]]
+    * accumulators materialize through [[graft.Checkpoint]]
     * each step, so lineage and carried size estimates stay flat across
     * arbitrarily many batches (at cluster scale the checkpoint maps to
     * the view's durable table, exactly how production IVM persists).
@@ -288,17 +288,16 @@ object Relational {
     var view: Option[DataFrame] = None
     var aAcc: Option[DataFrame] = None
     var bAcc: Option[DataFrame] = None
+    def staged(df: DataFrame) = graft.Checkpoint(df)._1
     def accum(acc: Option[DataFrame], d: DataFrame) =
-      Some(acc.map(a => Dedup.checkpointResetStats(a.unionByName(d)))
-        .getOrElse(d))
+      Some(acc.map(a => staged(a.unionByName(d))).getOrElse(d))
     events.foreach { case (isA, delta0) =>
-      val delta = Dedup.checkpointResetStats(delta0)
+      val delta = staged(delta0)
       val contrib =
         if (isA) bAcc.map(b => delta.join(b, Seq(key)))
         else aAcc.map(a => a.join(delta, Seq(key)))
       contrib.foreach { dv =>
-        view = Some(view.map(v =>
-          Dedup.checkpointResetStats(v.unionByName(dv))).getOrElse(dv))
+        view = Some(view.map(v => staged(v.unionByName(dv))).getOrElse(dv))
       }
       if (isA) aAcc = accum(aAcc, delta) else bAcc = accum(bAcc, delta)
     }
@@ -332,10 +331,10 @@ object Relational {
       .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("s"),
         min(col(valueCol)).as("mn"), max(col(valueCol)).as("mx"))
     batches.map(aggOf).reduce { (state, delta) =>
-      Dedup.checkpointResetStats(state.unionByName(delta)
+      graft.Checkpoint(state.unionByName(delta)
         .groupBy(col(keyCol))
         .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-          min(col("mn")).as("mn"), max(col("mx")).as("mx")))
+          min(col("mn")).as("mn"), max(col("mx")).as("mx")))._1
     }
   }
 

@@ -796,8 +796,9 @@ object Similarity {
     * [[upsertCentroidPartitionedIndex]] contract otherwise (touched
     * partitions only, cross-centroid drift, emptied dirs, sidecar).
     *
-    * Crash contract (extends the upsert's): the buffer is deleted ONLY
-    * after the fold's index/sidecar writes commit. A crash anywhere
+    * Crash contract (extends the upsert's): the folded batches, and only
+    * they, are deleted ONLY after the fold's index/sidecar writes commit
+    * (a batch staged meanwhile waits for the next fold). A crash anywhere
     * before that leaves the buffer intact and the re-run folds
     * value-identical rows (the upsert path is idempotent by its own
     * contract; the build path re-runs under an index that now exists
@@ -828,10 +829,12 @@ object Similarity {
       else
         upsertCentroidPartitionedIndex(winners, path, idCol)
     }
-    if (!fs.delete(pp, true))
+    for (d <- batchDirs if !fs.delete(d.getPath, true))
       throw new java.io.IOException(
-        s"foldIvfPending: failed to clear folded staging buffer $pp — " +
-        "a stale buffer would re-apply (harmlessly) but grow unbounded")
+        s"foldIvfPending: failed to clear folded staging batch ${d.getPath} — " +
+        "a stale batch would re-apply (harmlessly) but grow unbounded")
+    // non-recursive: refused when such a batch arrives after the listStatus
+    if (fs.listStatus(pp).isEmpty) try fs.delete(pp, false) catch { case _: java.io.IOException => }
   }
 
   private def pendingPath(path: String): String = s"$path.pending"

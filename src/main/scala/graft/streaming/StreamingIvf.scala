@@ -59,8 +59,8 @@ object StreamingIvf {
     * for Kafka/files and keeps the identical `foreachBatch` body; the
     * in-memory harness makes the batch decomposition reproducible (and
     * by order-independence, irrelevant to the final index). Staged
-    * batches are folded into the index every `foldEvery` micro-batches
-    * and once more when the stream stops, so the function returns with
+    * batches are folded into the index after batch ids `foldEvery - 1`,
+    * `2 * foldEvery - 1`, … and once more when the stream stops, so the function returns with
     * the index fully current and no pending buffer on disk.
     */
   def ingestInBatches(spark: SparkSession,
@@ -70,12 +70,12 @@ object StreamingIvf {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, Seq[Double])]
-    val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = source.toDF().toDF("vec_id", "embedding")
       .writeStream
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
         appendBatch(b.toDF(), centroids, path, id)
-        if (seen.incrementAndGet() % foldEvery == 0)
+        // keyed on the batch id, so a restarted stream keeps the cadence
+        if ((id + 1) % foldEvery == 0)
           Similarity.foldIvfPending(spark, path)
       }
       .start()

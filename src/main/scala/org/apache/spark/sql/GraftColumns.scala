@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
@@ -34,10 +34,12 @@ object GraftColumns {
 
   /** `df.collect()` in Catalyst's internal form: the same action (listeners
     * see a `collect`), without converting each row to an external `Row`.
-    * Every row returned is its own object.
+    * Every row returned is its own object, an `UnsafeRow` as a physical
+    * plan's collect yields them.
     */
-  def collectInternal(df: DataFrame): Array[InternalRow] = {
+  def collectInternal(df: DataFrame): Array[UnsafeRow] = {
     val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+      .map(_.asInstanceOf[UnsafeRow])
   }
 }

@@ -407,6 +407,49 @@ class IvfIndexSpec extends SparkSpec {
     assert(rows() == after)
   }
 
+  test("a batch staged while a fold runs survives it and folds next time") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.atomic.AtomicBoolean
+    val tmp = java.nio.file.Files.createTempDirectory("ivf-fold-race")
+    val path = tmp.resolve("idx").toString
+    Similarity.buildIvfIndex(emb.filter(col("vec_id").between(16, 199)), centroids, path)
+    def ids(from: Int, to: Int) = emb.filter(col("vec_id").between(from, to))
+      .select("vec_id", "embedding")
+    def indexed() = spark.read.parquet(path).select("vec_id")
+      .collect().map(_.getLong(0)).toSet
+    Similarity.stageIvfPendingBatch(ids(200, 210), centroids, path, 1L)
+    // a complete batch, staged beside the index and copied into its buffer
+    // when the fold's first job starts: after the fold listed the buffer
+    val spare = tmp.resolve("spare").toString
+    Similarity.stageIvfPendingBatch(ids(300, 310), centroids, spare, 7L)
+    val late = new Path(s"$path.pending/b=7")
+    val fs = late.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val folding = new AtomicBoolean(true)
+    val stagedDuringFold = new AtomicBoolean()
+    val staged = new AtomicBoolean()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (staged.compareAndSet(false, true)) {
+          FileUtil.copy(fs, new Path(s"$spare.pending/b=7"), fs, late, false, fs.getConf)
+          stagedDuringFold.set(folding.get)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Similarity.foldIvfPending(spark, path)
+    finally {
+      folding.set(false)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(stagedDuringFold.get, "the batch must be staged while the fold runs")
+    assert(fs.exists(late), "a batch staged during a fold must survive it")
+    assert(!fs.exists(new Path(s"$path.pending/b=1")), "the folded batch is cleared")
+    assert(indexed() == (16L to 210L).toSet)
+    Similarity.foldIvfPending(spark, path)
+    assert(indexed() == (16L to 210L).toSet ++ (300L to 310L))
+    assert(!fs.exists(new Path(s"$path.pending")), "an empty buffer is removed")
+  }
+
   test("nProbe recall ladder: non-decreasing, full probe = perfect recall") {
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"),
